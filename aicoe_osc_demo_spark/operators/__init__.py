@@ -29,6 +29,8 @@ from .similarity import (
 from .fuzzy import fuzzy_best_match_join, jaccard_best_match_join
 from .reshape import explode_paragraphs, nest_to_squad, gather_table_text
 from .inference import (
+    score_pairs,
+    rank_answers,
     stub_relevance_scores,
     stub_qa_answers,
     relevance_pipeline,
@@ -61,6 +63,8 @@ __all__ = [
     "explode_paragraphs",
     "nest_to_squad",
     "gather_table_text",
+    "score_pairs",
+    "rank_answers",
     "stub_relevance_scores",
     "stub_qa_answers",
     "relevance_pipeline",

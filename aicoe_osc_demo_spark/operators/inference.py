@@ -6,11 +6,17 @@ dicts of (question, paragraph) pairs, GPU batch 16
 text_kpi_infer.py:46-68,180-232).  The Spark shape:
 
 - question fan-out = crossJoin(broadcast(questions))  (J3)
-- scoring = ``mapInPandas`` with a per-executor model singleton (loaded
-  lazily on first batch, cached in the worker process — the FARM
-  ``num_processes`` pool and 1000-dict chunking both disappear: Arrow batch
-  size is the chunk, executor cores are the pool)
-- no-answer aggregation (A2) + top-k ranking (W1) stay relational.
+- scoring = ONE ``mapInPandas`` stage, built by ``score_pairs``, with a
+  per-executor model singleton (loaded lazily on first batch, cached in
+  the worker process — the FARM ``num_processes`` pool and 1000-dict
+  chunking both disappear: Arrow batch size is the chunk, executor cores
+  are the pool).  It scores relevance (M1), QA (M2), or both in one pass:
+  relevance, the threshold filter inside the batch, then QA on the rows
+  that survive — one Arrow round trip per batch instead of two.
+  ``stub_relevance_scores`` and ``stub_qa_answers`` are its two one-model
+  forms.
+- no-answer boost (F19) + top-k ranking (W1) stay relational
+  (``rank_answers``), as does the no-answer aggregation (A2).
 
 Transformer weights are not available in this container, so the default
 scorer is a DETERMINISTIC STUB — a pure arithmetic function of the input
@@ -168,30 +174,66 @@ def _get_model(spec: str = "stub"):
     return _MODEL_CACHE[spec]
 
 
+_QA_FIELDS = [
+    StructField("answer", StringType()),
+    StructField("score", DoubleType()),
+    StructField("no_ans_score", DoubleType()),
+]
+
+
+def score_pairs(
+    pairs: DataFrame,
+    question_col: str = "question",
+    text_col: str = "text",
+    model: str = "stub",
+    relevance: bool = True,
+    threshold: float | None = None,
+    qa: bool = False,
+) -> DataFrame:
+    """The one scoring stage: a single mapInPandas over (question, text)
+    pairs, with the backend resolved once per worker by ``_get_model``
+    ("stub" or a checkpoint path).
+
+    - ``relevance``: M1 — add the relevance ``score``; with ``threshold``
+      set, keep only rows scoring at least that, inside the batch.
+    - ``qa``: M2 — add (answer, score, no_ans_score) for the rows that
+      reach it; the QA score replaces the relevance score.
+
+    Both together are the fused relevance → QA scorer: one Arrow round trip
+    per batch, and QA only runs on the pairs that pass the threshold.
+    """
+    cols = pairs.columns
+    # Build the output schema without mutating pairs.schema (StructType.add
+    # mutates in place and DataFrame.schema is cached).
+    added = _QA_FIELDS if qa else [StructField("score", DoubleType())]
+    out_schema = StructType(
+        [StructField(f.name, f.dataType, f.nullable) for f in pairs.schema.fields] + added
+    )
+    out_cols = cols + [f.name for f in added]
+
+    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        backend = _get_model(model)
+        for pdf in batches:
+            if relevance:
+                pdf["score"] = backend.predict_relevance(pdf[question_col], pdf[text_col])
+                if threshold is not None:
+                    pdf = pdf[pdf["score"] >= threshold]
+            if qa:
+                preds = backend.predict_qa(pdf[question_col], pdf[text_col])
+                pdf = pdf.assign(**{c: preds[c] for c in preds.columns})
+            yield pdf[out_cols]
+
+    return pairs.mapInPandas(score_batches, schema=out_schema)
+
+
 def stub_relevance_scores(
     pairs: DataFrame,
     question_col: str = "question",
     text_col: str = "text",
     model: str = "stub",
 ) -> DataFrame:
-    """M1 scoring stage: mapInPandas over (question, text) pairs → + score.
-    ``model`` is the backend spec resolved executor-side by ``_get_model``
-    ("stub" or a checkpoint path)."""
-    cols = pairs.columns
-    # Build the output schema without mutating pairs.schema (StructType.add
-    # mutates in place and DataFrame.schema is cached).
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, f.nullable) for f in pairs.schema.fields]
-        + [StructField("score", DoubleType())]
-    )
-
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = _get_model(model)
-        for pdf in batches:
-            pdf["score"] = backend.predict_relevance(pdf[question_col], pdf[text_col])
-            yield pdf[cols + ["score"]]
-
-    return pairs.mapInPandas(score_batches, schema=out_schema)
+    """M1 scoring stage: (question, text) pairs → + score."""
+    return score_pairs(pairs, question_col, text_col, model)
 
 
 def stub_qa_answers(
@@ -200,34 +242,16 @@ def stub_qa_answers(
     text_col: str = "text",
     model: str = "stub",
 ) -> DataFrame:
-    """M2 scoring stage: mapInPandas → (answer, score, no_ans_score)."""
-    cols = pairs.columns
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, f.nullable) for f in pairs.schema.fields]
-        + [
-            StructField("answer", StringType()),
-            StructField("score", DoubleType()),
-            StructField("no_ans_score", DoubleType()),
-        ]
-    )
-
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        backend = _get_model(model)
-        for pdf in batches:
-            preds = backend.predict_qa(pdf[question_col], pdf[text_col])
-            for c in preds.columns:
-                pdf[c] = preds[c]
-            yield pdf[cols + ["answer", "score", "no_ans_score"]]
-
-    return pairs.mapInPandas(score_batches, schema=out_schema)
+    """M2 scoring stage: → + (answer, score, no_ans_score)."""
+    return score_pairs(pairs, question_col, text_col, model, relevance=False, qa=True)
 
 
-def infer_single_pair(spark, text: str, question: str) -> dict:
+def infer_single_pair(spark, text: str, question: str, model: str = "stub") -> dict:
     """M3 — single-pair ad-hoc inference (ref: relevance_infer.py:240-246
     run_text / text_kpi_infer.py:70-82 infer_on_dict): the same scoring stage
-    applied to a 1-row DataFrame."""
+    applied to a 1-row DataFrame, with the same ``model`` spec."""
     df = spark.createDataFrame([(question, text)], ["question", "text"])
-    row = stub_qa_answers(df).first()
+    row = stub_qa_answers(df, model=model).first()
     return {
         "answer": row.answer,
         "score": row.score,
@@ -274,6 +298,29 @@ def relevance_pipeline(
     return scored.filter(F.col("score") >= threshold)
 
 
+def rank_answers(
+    answered: DataFrame,
+    group_cols: list[str],
+    top_k: int = 4,
+    no_ans_boost: float = -0.015,
+    tiebreak: list[str] | None = None,
+) -> DataFrame:
+    """The QA tail over (answer, score, no_ans_score) rows: apply the
+    no-answer boost (F19), pick ``final_answer``, and keep the top-k answers
+    per group (W1)."""
+    answered = answered.withColumn(
+        "pure_no_ans_score", F.col("no_ans_score") + F.lit(no_ans_boost)
+    ).withColumn(
+        "final_answer",
+        F.when(F.col("pure_no_ans_score") > F.col("score"), F.lit("no_answer")).otherwise(
+            F.col("answer")
+        ),
+    )
+    return top_k_per_group(
+        answered, group_cols, F.col("score"), top_k, tiebreak=tiebreak or ["final_answer"]
+    )
+
+
 def qa_pipeline(
     relevant: DataFrame,
     group_cols: list[str],
@@ -283,19 +330,8 @@ def qa_pipeline(
     model: str = "stub",
 ) -> DataFrame:
     """M2 end-to-end (ref: text_kpi_infer.py:180-274): QA-score each
-    (question, paragraph), apply the no-answer boost (F19), rank answers per
-    (doc-group, question) and keep top-k (W1), plus the per-group
-    all-no-answer aggregate (A2)."""
-    answered = stub_qa_answers(relevant, model=model)
-    answered = answered.withColumn(
-        "pure_no_ans_score", F.col("no_ans_score") + F.lit(no_ans_boost)
-    ).withColumn(
-        "final_answer",
-        F.when(F.col("pure_no_ans_score") > F.col("score"), F.lit("no_answer")).otherwise(
-            F.col("answer")
-        ),
+    (question, paragraph), then ``rank_answers``.  The per-group
+    all-no-answer aggregate (A2) is ``plans.ml.ml_no_answer_aggregate``."""
+    return rank_answers(
+        stub_qa_answers(relevant, model=model), group_cols, top_k, no_ans_boost, tiebreak
     )
-    ranked = top_k_per_group(
-        answered, group_cols, F.col("score"), top_k, tiebreak=tiebreak or ["final_answer"]
-    )
-    return ranked

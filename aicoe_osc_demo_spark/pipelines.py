@@ -8,9 +8,9 @@ materialization becomes optional checkpoints.
 - demo1 (§3.2): CSV/parquet → snakify → tables → LEFT JOIN CTAS → aggregate
   (ref: notebooks/demo1[depracated]/demo1-create-tables.ipynb,
   demo1-join-tables.ipynb).
-- inference (§3.1): binary docs → extract → crossJoin(questions) → relevance
-  scores → QA answers → ranked results table
-  (ref: notebooks/demo2/inference.pipeline).
+- inference (§3.1): binary docs → extract → crossJoin(questions) → one
+  scoring pass (relevance, threshold, QA answers in a single mapInPandas)
+  → ranked results table (ref: notebooks/demo2/inference.pipeline).
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from .functions.text import (
     year_in_question,
 )
 from .operators.curation import farm_zero_shift, find_answer_start_udf, negative_sample
-from .operators.inference import qa_pipeline, relevance_pipeline
+from .operators.inference import rank_answers, score_pairs
 from .operators.relational import dedup_keep_first, train_dev_split
 from .operators.reshape import explode_paragraphs, nest_to_squad
 from .sources.extraction import run_folder
@@ -290,19 +290,21 @@ def inference_pipeline(
     results_table: str | None = None,
 ) -> DataFrame:
     """§3.1 — the full PDF→results-table DAG as one lazy plan:
-    binaryFile scan → extract (S1) → question fan-out (J3) → relevance stage
-    (M1) → QA stage (M2) + no-answer boost (F19) → top-k (W1).  The
-    reference ran this as 4 Kubeflow pods over 29.3 h for 144 PDFs on one
-    node; here every stage parallelizes per document."""
+    binaryFile scan → extract (S1) → question fan-out (J3) → one scoring
+    stage: relevance (M1), threshold, QA (M2) → no-answer boost (F19) →
+    top-k (W1).  The reference ran this as 4 Kubeflow pods over 29.3 h for
+    144 PDFs on one node; here every stage parallelizes per document, the
+    plan has two Python stages (extraction and the scorer), and building
+    it starts no Spark job."""
     paragraphs = run_folder(spark, pdf_dir, processed=processed).withColumnRenamed(
         "paragraph", "text"
     )
-    relevant = relevance_pipeline(paragraphs, questions, threshold=relevance_threshold)
-    ranked = qa_pipeline(
-        relevant.select("pdf_name", "page", "kpi_id", "question", "text"),
-        group_cols=["pdf_name", "kpi_id"],
-        top_k=top_k,
-        tiebreak=["page", "text"],
+    pairs = paragraphs.crossJoin(F.broadcast(questions)).select(
+        "pdf_name", "page", "kpi_id", "question", "text"
+    )
+    answered = score_pairs(pairs, threshold=relevance_threshold, qa=True)
+    ranked = rank_answers(
+        answered, group_cols=["pdf_name", "kpi_id"], top_k=top_k, tiebreak=["page", "text"]
     )
     results = ranked.select(
         "pdf_name", "kpi_id", "question", "page", "final_answer", F.round("score", 6).alias("score")

@@ -21,7 +21,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def default_cpus() -> str:
+    """Core count for ``local[N]``: ``SPARK_GRAFT_CPUS`` when set, else the
+    cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def session_confs(
@@ -33,7 +37,7 @@ def session_confs(
     function so tests can assert the exact confs (``getOrCreate`` against a
     live session silently drops non-SQL confs, making post-hoc assertion
     unreliable)."""
-    cpus = cpus or DEFAULT_CPUS
+    cpus = cpus or default_cpus()
     confs = {
         "spark.sql.shuffle.partitions": str(max(int(cpus), 8)),
         "spark.sql.adaptive.enabled": "true",
@@ -75,7 +79,7 @@ def get_spark(
     On local mode the configs are accepted but only enforced when a
     resource-discovery script is configured, matching stock Spark behavior.
     """
-    cpus = cpus or DEFAULT_CPUS
+    cpus = cpus or default_cpus()
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     for key, value in session_confs(cpus, gpus_per_task, gpus_per_executor).items():
         builder = builder.config(key, value)

@@ -352,14 +352,27 @@ def run_folder(
 ) -> DataFrame:
     """S2 + P10 — the folder-scan driver: binaryFile scan, optional left-semi
     join against annotation source_file names, anti-join against the
-    processed ledger, then S1 extraction (pdf_text_extractor.py:129-191)."""
+    processed ledger, then S1 extraction (pdf_text_extractor.py:129-191).
+
+    Both joins broadcast their (one row per document) side, so extraction
+    keeps the scan's one-partition-per-file layout.  The width gate reads
+    the file count the scan's file index already holds — no Spark job —
+    and spreads the paragraphs over ``defaultParallelism`` partitions only
+    when the folder has fewer files than that, so a small batch still
+    scores on every core downstream.
+    """
     from .files import read_binary_docs
 
-    docs = read_binary_docs(spark, input_dir, glob).withColumn(
-        "pdf_name", F.element_at(F.split(F.col("path"), "/"), -1)
-    )
+    docs = read_binary_docs(spark, input_dir, glob)
+    width = spark.sparkContext.defaultParallelism
+    narrow = len(docs.inputFiles()) < width
+    docs = docs.withColumn("pdf_name", F.element_at(F.split(F.col("path"), "/"), -1))
     if annotated_names is not None:
         docs = docs.join(F.broadcast(annotated_names), on="pdf_name", how="left_semi")
     if processed is not None:
-        docs = docs.join(processed.select("pdf_name").distinct(), on="pdf_name", how="left_anti")
-    return extract_text(docs, min_paragraph_length)
+        ledger = processed.select("pdf_name").distinct()
+        docs = docs.join(F.broadcast(ledger), on="pdf_name", how="left_anti")
+    paragraphs = extract_text(docs, min_paragraph_length)
+    if narrow:
+        return paragraphs.repartition(width)
+    return paragraphs

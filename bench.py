@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+$SPARK_GRAFT_CPUS defaults to the host's cores.
 
 Each query is materialized via a checksum aggregation over EVERY output
 column (sum of xxhash64 of the row) — a bare .count() lets Catalyst's
@@ -368,10 +369,10 @@ def _drift_canary(spark, sf_dir: str) -> list[float]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
     from aicoe_osc_demo_spark.plans import QUERIES
-    from aicoe_osc_demo_spark.session import get_spark
+    from aicoe_osc_demo_spark.session import default_cpus, get_spark
+
+    cpus = default_cpus()
 
     spark = get_spark("bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from aicoe_osc_demo_spark.session import get_spark, session_confs
+import os
+
+from aicoe_osc_demo_spark.session import default_cpus, get_spark, session_confs
 
 
 def test_default_confs_pin_determinism_and_aqe():
@@ -29,3 +31,10 @@ def test_get_spark_applies_conf_map(spark):
         assert s.conf.get("spark.sql.shuffle.partitions") == "8"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_default_cpus_follows_the_host(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == "3"

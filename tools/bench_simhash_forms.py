@@ -104,7 +104,7 @@ def best_of(fn, runs=3):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("bench-simhash", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("bench-simhash")
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = load_table(spark, sf_dir, "documents")

@@ -247,7 +247,7 @@ def main() -> None:
     from aicoe_osc_demo_spark.plans import QUERIES as CATALOG
     from aicoe_osc_demo_spark.session import get_spark
 
-    spark = get_spark("scale-curve", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("scale-curve")
     spark.sparkContext.setLogLevel("ERROR")
 
     dirs: dict[int, str] = {}
