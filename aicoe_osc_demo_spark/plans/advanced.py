@@ -847,9 +847,10 @@ def layout_column_histograms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # session catalog.  Results are plain join output either way, so the
 # oracle is the ordinary SQL join — the bucketing is a physical
 # property, pinned by test_physical_layout's no-Exchange assertion.
-# mtime in the key (same pattern as plans/corpus.py's _BM25_INDEX_CACHE):
-# a regenerated dataset under the same sf_dir rebuilds the buckets.
-_BUCKETED_READY: set[tuple[int, str, float]] = set()
+# The tables' file-set signatures are in the key (same pattern as
+# plans/corpus.py's _BM25_INDEX_CACHE): a regenerated dataset under the
+# same sf_dir rebuilds the buckets.
+_BUCKETED_READY: set[tuple[int, str, tuple]] = set()
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -857,11 +858,11 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import tempfile
 
     from ..sources.files import write_bucketed_table
-    from ..sources.tables import tables_mtime
+    from ..sources.tables import tables_signature
 
     tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
     ot, ct = f"bkt_orders_{tag}", f"bkt_customer_{tag}"
-    key = (id(spark), sf_dir, tables_mtime(sf_dir, ("orders", "customer")))
+    key = (id(spark), sf_dir, tables_signature(sf_dir, ("orders", "customer")))
     if key not in _BUCKETED_READY or not spark.catalog.tableExists(ot):
         _BUCKETED_READY.difference_update(
             {k for k in _BUCKETED_READY if k[:2] == (id(spark), sf_dir)}

@@ -729,25 +729,12 @@ def llm_pack_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Cache key is (sf_dir, documents.parquet mtime): a regenerated dataset
-# under the same path invalidates the entry instead of silently serving a
-# stale index.  The TemporaryDirectory objects are held here so the dirs
-# live while cached and are removed at interpreter exit (no orphan dirs).
-_BM25_INDEX_CACHE: dict[tuple[str, float], tuple[object, str]] = {}
-
-
-def _documents_mtime(sf_dir: str) -> float:
-    import os
-
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(p):
-            return max(
-                os.path.getmtime(os.path.join(p, f)) for f in os.listdir(p)
-            )
-        return os.path.getmtime(p)
-    except OSError:
-        return -1.0
+# Cache key is (sf_dir, documents.parquet file-set signature): a
+# regenerated dataset under the same path invalidates the entry instead of
+# silently serving a stale index.  The TemporaryDirectory objects are held
+# here so the dirs live while cached and are removed at interpreter exit
+# (no orphan dirs).
+_BM25_INDEX_CACHE: dict[tuple[str, tuple], tuple[object, str]] = {}
 
 
 @register("llm_bm25_from_index", _BM25_SQL)
@@ -759,8 +746,9 @@ def llm_bm25_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the query terms' partitions (PartitionFilters, test-pinned).
     # Build-once/serve-many, same artifact pattern as write_ivfpq_index.
     from ..operators.corpus import bm25_topk_from_index, write_bm25_index
+    from ..sources.tables import tables_signature
 
-    key = (sf_dir, _documents_mtime(sf_dir))
+    key = (sf_dir, tables_signature(sf_dir, ("documents",)))
     if key not in _BM25_INDEX_CACHE:
         import tempfile
 

@@ -1333,10 +1333,11 @@ def join_returned_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-bucket with NO Exchange on either fact side (pinned by
 # test_physical_layout), demonstrating the remedy layout_bucketed_join
 # introduced on the fact⋈dim case.  Same memo contract as
-# plans/advanced.py's _BUCKETED_READY, with the source tables' mtime in the
-# key (the _documents_mtime pattern from plans/corpus.py) so a regenerated
-# dataset under the same sf_dir rebuilds instead of serving stale buckets.
-_BUCKETED_FACTS_READY: set[tuple[int, str, float]] = set()
+# plans/advanced.py's _BUCKETED_READY, with the source tables' file-set
+# signatures in the key (the pattern of plans/corpus.py's BM25 index) so a
+# regenerated dataset under the same sf_dir rebuilds instead of serving
+# stale buckets.
+_BUCKETED_FACTS_READY: set[tuple[int, str, tuple]] = set()
 
 
 def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -1344,11 +1345,11 @@ def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import tempfile
 
     from ..sources.files import write_bucketed_table
-    from ..sources.tables import tables_mtime
+    from ..sources.tables import tables_signature
 
     tag = re.sub(r"[^a-z0-9]+", "_", sf_dir.lower()).strip("_")
     ot, lt = f"bkt_orders_ok_{tag}", f"bkt_lineitem_ok_{tag}"
-    key = (id(spark), sf_dir, tables_mtime(sf_dir, ("orders", "lineitem")))
+    key = (id(spark), sf_dir, tables_signature(sf_dir, ("orders", "lineitem")))
     if key not in _BUCKETED_FACTS_READY or not spark.catalog.tableExists(ot):
         # drop stale memo entries for the same session+dir (data regenerated)
         _BUCKETED_FACTS_READY.difference_update(

@@ -51,6 +51,9 @@ def session_confs(
         # empty tasks).  On a real cluster the default 128 MB split applies
         # across many files/row-groups.
         "spark.sql.session.timeZone": "UTC",
+        # events.parquet stores TIMESTAMP(NANOS); sources.tables.load_table
+        # reads it as long nanos.  Set here so no read flips it mid-session.
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),

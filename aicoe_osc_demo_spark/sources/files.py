@@ -23,6 +23,9 @@ Reference behavior being re-expressed (WHAT, not HOW):
 
 from __future__ import annotations
 
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -52,8 +55,77 @@ def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
 
 
+def _file_set_signature(path: str) -> tuple[int, int] | None:
+    """(latest mtime in ns, total bytes) over ``path`` and, for a directory,
+    everything under it; None when ``path`` is missing.
+
+    The path's own mtime catches a deleted part file; the contained files'
+    mtimes catch a part file overwritten in place, which leaves the
+    directory mtime unchanged; the byte total catches a rewrite that lands
+    within the filesystem's timestamp granularity."""
+    try:
+        st = os.stat(path)
+        latest, size = st.st_mtime_ns, st.st_size
+        for root, dirs, files in os.walk(path):
+            for name in dirs + files:
+                st = os.stat(os.path.join(root, name))
+                latest = max(latest, st.st_mtime_ns)
+                size += st.st_size
+    except OSError:
+        return None
+    return latest, size
+
+
+# Confs that change the schema Spark infers from a parquet footer; their
+# values are part of the schema memo's key.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# Bounded: past _SCHEMA_MEMO_MAX entries the oldest is dropped.
+_SCHEMA_MEMO_MAX = 256
+_PARQUET_SCHEMAS: dict[tuple, StructType] = {}
+_PARQUET_SCHEMAS_LOCK = threading.Lock()
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Parquet scan that infers the schema once per file set.
+
+    ``spark.read.parquet(path)`` launches a one-task Spark job to read the
+    footer while the plan is still being built.  This reader keeps, per
+    process, the ``StructType`` that read inferred, keyed on the path, its
+    ``_file_set_signature`` and the values of the parquet-inference confs.
+    A miss does the inferring read and stores its schema; a hit returns
+    ``spark.read.schema(memo).parquet(path)``, which starts no job.  Every
+    call builds a new relation with fresh attribute ids, so self-joins
+    resolve as with a plain read.
+
+    Staleness: an entry goes stale only if the files under ``path`` are
+    replaced without any mtime or the total size changing.
+
+    Directories the engine rewrites in place (persisted indexes in
+    ``operators/similarity.py`` and ``plans/llm.py``, streaming state in
+    ``streaming/incremental.py``) keep their plain ``spark.read.parquet``
+    reads.
+    """
+    key = (
+        path,
+        _file_set_signature(path),
+        tuple(spark.conf.get(c) for c in _PARQUET_INFERENCE_CONFS),
+    )
+    schema = _PARQUET_SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    schema = df.schema
+    with _PARQUET_SCHEMAS_LOCK:
+        if len(_PARQUET_SCHEMAS) >= _SCHEMA_MEMO_MAX:
+            del _PARQUET_SCHEMAS[next(iter(_PARQUET_SCHEMAS))]
+        _PARQUET_SCHEMAS[key] = schema
+    return df
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:

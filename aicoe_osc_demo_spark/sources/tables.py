@@ -7,6 +7,8 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .files import _file_set_signature, read_parquet
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -23,6 +25,14 @@ TPCH_TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Session confs the ``events`` read needs; ``session.session_confs`` sets
+# both, so on ``get_spark`` sessions load_table never changes a conf.
+_EVENTS_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
@@ -30,25 +40,36 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan; Catalyst prunes columns / pushes filters into it.
 
+    Reads go through ``files.read_parquet``, so only the first load of a
+    table in a process infers its schema (a one-task footer job); later
+    loads reuse the memoized ``StructType``, keyed on the path, its
+    file-set signature (latest mtime and total size of the files) and the
+    parquet-inference confs, and start no job while the plan is built.
+    Rewriting the table's files invalidates the entry, unless the rewrite
+    keeps every mtime and the total size.
+
     The ``events`` table is written with TIMESTAMP(NANOS) which Spark's
     vectorized reader rejects; read it as long nanos and truncate to
     microseconds (exactly what DuckDB/Arrow do when downcasting ns → µs).
+    ``get_spark`` sessions already carry both confs it needs; other
+    sessions get them set here once, on the first ``events`` load.
     """
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # timestamp_micros produces a session-TZ timestamp; pin UTC and cast
         # to NTZ so the wall-clock value equals the stored (naive) value on
         # any driver session — the other tables are already timestamp_ntz.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        for key, value in _EVENTS_CONFS.items():
+            if spark.conf.get(key) != value:
+                spark.conf.set(key, value)
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = read_parquet(spark, table_path(sf_dir, name))
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
             )
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def table_rows(sf_dir: str, name: str) -> int:
@@ -56,17 +77,15 @@ def table_rows(sf_dir: str, name: str) -> int:
     job).  Plan builders that size a parameter from the corpus cardinality
     (LSH plane count, k-means k) use this so constructing the plan stays
     lazy — no eager full-table count() scan per entry, and explain/audit
-    paths never launch a job.  Keyed on the max over the CONTAINED parquet
-    files' mtimes (plus the path's own mtime, which catches part-file
-    deletion): overwriting a part file in place keeps the directory mtime
-    unchanged, so a directory-mtime key could serve a stale count for a
-    regenerated same-layout dataset (r12 advice)."""
+    paths never launch a job.  Keyed on the path's file-set signature (the
+    same key as the schema memo), so a part file overwritten in place
+    invalidates the count."""
     p = table_path(sf_dir, name)
-    return _footer_rows(p, max(tables_mtime(sf_dir, (name,)), os.path.getmtime(p)))
+    return _footer_rows(p, _file_set_signature(p))
 
 
 @lru_cache(maxsize=256)
-def _footer_rows(path: str, _mtime: float) -> int:
+def _footer_rows(path: str, _signature: tuple[int, int] | None) -> int:
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
@@ -78,31 +97,12 @@ def _footer_rows(path: str, _mtime: float) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def tables_mtime(sf_dir: str, names: tuple[str, ...]) -> float:
-    """Latest parquet mtime across ``names`` — cache-key component for
+def tables_signature(sf_dir: str, names: tuple[str, ...]) -> tuple:
+    """File-set signatures of ``names`` — cache-key component for
     process-scoped derived artifacts (bucketed tables, persisted indexes) so
     a regenerated dataset under the same sf_dir invalidates instead of
     silently serving stale data."""
-    latest = -1.0
-    for name in names:
-        p = table_path(sf_dir, name)
-        try:
-            if os.path.isdir(p):
-                # default guards the empty-directory case (the r12 advice:
-                # a bare max() over an empty listing raises ValueError,
-                # which the OSError handler below would not catch)
-                latest = max(
-                    latest,
-                    max(
-                        (os.path.getmtime(os.path.join(p, f)) for f in os.listdir(p)),
-                        default=-1.0,
-                    ),
-                )
-            else:
-                latest = max(latest, os.path.getmtime(p))
-        except OSError:
-            pass
-    return latest
+    return tuple(_file_set_signature(table_path(sf_dir, n)) for n in names)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

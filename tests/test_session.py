@@ -12,6 +12,8 @@ def test_default_confs_pin_determinism_and_aqe():
     assert confs["spark.sql.session.timeZone"] == "UTC"
     assert confs["spark.sql.adaptive.enabled"] == "true"
     assert confs["spark.sql.shuffle.partitions"] == "8"
+    # the events read needs it; set once so no read flips it mid-session
+    assert confs["spark.sql.legacy.parquet.nanosAsLong"] == "true"
     assert "spark.task.resource.gpu.amount" not in confs
 
 
