@@ -5,16 +5,21 @@ dicts of (question, paragraph) pairs, GPU batch 16
 (ref: /root/reference/src/models/relevance_infer.py:54-60,95-143 and
 text_kpi_infer.py:46-68,180-232).  The Spark shape:
 
-- question fan-out = crossJoin(broadcast(questions))  (J3)
-- scoring = ONE ``mapInPandas`` stage, built by ``score_pairs``, with a
-  per-executor model singleton (loaded lazily on first batch, cached in
-  the worker process — the FARM ``num_processes`` pool and 1000-dict
-  chunking both disappear: Arrow batch size is the chunk, executor cores
-  are the pool).  It scores relevance (M1), QA (M2), or both in one pass:
-  relevance, the threshold filter inside the batch, then QA on the rows
-  that survive — one Arrow round trip per batch instead of two.
-  ``stub_relevance_scores`` and ``stub_qa_answers`` are its two one-model
-  forms.
+- scoring = a ``mapInPandas`` stage with a per-executor model singleton
+  (loaded lazily on first batch, cached in the worker process — the FARM
+  ``num_processes`` pool and 1000-dict chunking both disappear: Arrow batch
+  size is the chunk, executor cores are the pool).  One pass scores
+  relevance (M1), QA (M2), or both: relevance, the threshold filter inside
+  the batch, then QA on the rows that survive.  ``_score_frame`` is that
+  per-batch body, shared by the two stages that run it:
+  - ``score_pairs`` over (question, text) pairs that a plan has already
+    fanned out (crossJoin(broadcast(questions)), J3); ``stub_relevance_scores``
+    and ``stub_qa_answers`` are its two one-model forms;
+  - ``extract_and_score`` over raw documents: extraction (S1), the question
+    fan-out in pandas and both models in ONE Python pass per document, so
+    the paragraphs never cross a Python boundary.  Every Python task pays
+    a fixed worker-side start-up cost, so fewer Python stages is fewer
+    tasks paying it.
 - no-answer boost (F19) + top-k ranking (W1) stay relational
   (``rank_answers``), as does the no-answer aggregation (A2).
 
@@ -33,13 +38,15 @@ spec, mirroring how ``sources/extraction.py`` treats pdfminer.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
+from ..sources.extraction import _doc_paragraphs
 from .relational import top_k_per_group
 
 # Per-executor model cache (S12): populated lazily inside the worker, reused
@@ -181,6 +188,28 @@ _QA_FIELDS = [
 ]
 
 
+def _score_frame(
+    backend,
+    pdf: pd.DataFrame,
+    question_col: str,
+    text_col: str,
+    relevance: bool,
+    threshold: float | None,
+    qa: bool,
+    out_cols: list[str],
+) -> pd.DataFrame:
+    """Score one batch of (question, text) pairs: relevance, the threshold,
+    then QA on the rows that pass (see ``score_pairs``)."""
+    if relevance:
+        pdf["score"] = backend.predict_relevance(pdf[question_col], pdf[text_col])
+        if threshold is not None:
+            pdf = pdf[pdf["score"] >= threshold]
+    if qa:
+        preds = backend.predict_qa(pdf[question_col], pdf[text_col])
+        pdf = pdf.assign(**{c: preds[c] for c in preds.columns})
+    return pdf[out_cols]
+
+
 def score_pairs(
     pairs: DataFrame,
     question_col: str = "question",
@@ -190,8 +219,8 @@ def score_pairs(
     threshold: float | None = None,
     qa: bool = False,
 ) -> DataFrame:
-    """The one scoring stage: a single mapInPandas over (question, text)
-    pairs, with the backend resolved once per worker by ``_get_model``
+    """The scoring stage over pairs: a single mapInPandas over (question,
+    text) rows, with the backend resolved once per worker by ``_get_model``
     ("stub" or a checkpoint path).
 
     - ``relevance``: M1 — add the relevance ``score``; with ``threshold``
@@ -214,16 +243,88 @@ def score_pairs(
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         backend = _get_model(model)
         for pdf in batches:
-            if relevance:
-                pdf["score"] = backend.predict_relevance(pdf[question_col], pdf[text_col])
-                if threshold is not None:
-                    pdf = pdf[pdf["score"] >= threshold]
-            if qa:
-                preds = backend.predict_qa(pdf[question_col], pdf[text_col])
-                pdf = pdf.assign(**{c: preds[c] for c in preds.columns})
-            yield pdf[out_cols]
+            yield _score_frame(
+                backend, pdf, question_col, text_col, relevance, threshold, qa, out_cols
+            )
 
     return pairs.mapInPandas(score_batches, schema=out_schema)
+
+
+_PAIR_FIELDS = ["pdf_name", "page", "kpi_id", "question", "text"]
+
+
+def _extract_and_score_batches(
+    batches: Iterator[pd.DataFrame],
+    model: str,
+    min_len: int,
+    threshold: float | None,
+    max_rows: int,
+) -> Iterator[pd.DataFrame]:
+    """Body of ``extract_and_score``: per document, decode its paragraphs,
+    fan them out over the question list, and score the pairs in chunks of
+    at most ``max_rows`` (no limit when ``max_rows`` is not positive)."""
+    backend = _get_model(model)
+    out_cols = _PAIR_FIELDS + [f.name for f in _QA_FIELDS]
+    for pdf in batches:
+        for path, content, qs in zip(pdf["path"], pdf["content"], pdf["questions"]):
+            paras = pd.DataFrame(
+                list(_doc_paragraphs(path, content, min_len)),
+                columns=["pdf_name", "page", "text"],
+            )
+            questions = pd.DataFrame(list(qs), columns=["kpi_id", "question"])
+            pairs = paras.merge(questions, how="cross")[_PAIR_FIELDS]
+            step = max_rows if max_rows > 0 else max(len(pairs), 1)
+            for lo in range(0, len(pairs), step):
+                chunk = pairs.iloc[lo : lo + step].copy()
+                yield _score_frame(
+                    backend, chunk, "question", "text",
+                    relevance=True, threshold=threshold, qa=True, out_cols=out_cols,
+                )
+
+
+def extract_and_score(
+    docs: DataFrame,
+    questions: DataFrame,
+    min_paragraph_length: int = 30,
+    threshold: float | None = None,
+    model: str = "stub",
+) -> DataFrame:
+    """S1 → J3 → M1 → M2 as ONE mapInPandas over the documents: each task
+    decodes a document's paragraphs, fans them out over the question list
+    in pandas, then scores relevance, applies ``threshold`` and runs QA on
+    the survivors — the rows ``score_pairs(..., threshold, qa=True)``
+    returns over ``extract_text(docs)`` × ``questions``.
+
+    ``docs`` has (path, content) rows as from ``select_documents``;
+    ``questions`` has (kpi_id, question).  The question list reaches every
+    document row as one scalar-subquery value
+    (``collect_list(struct(kpi_id, question))``), so the plan has no join
+    and the paragraphs never cross a Python boundary.  Scored chunks hold
+    at most ``spark.sql.execution.arrow.maxRecordsPerBatch`` pairs, which
+    bounds a task's memory like the Arrow batches of ``score_pairs``.
+    """
+    qlist = questions.agg(F.collect_list(F.struct("kpi_id", "question"))).scalar()
+    q_fields = [questions.schema[c] for c in ("kpi_id", "question")]
+    out_schema = StructType(
+        [
+            StructField("pdf_name", StringType()),
+            StructField("page", IntegerType()),
+            *(StructField(f.name, f.dataType, f.nullable) for f in q_fields),
+            StructField("text", StringType()),
+            *_QA_FIELDS,
+        ]
+    )
+    max_rows = int(docs.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    body = functools.partial(
+        _extract_and_score_batches,
+        model=model,
+        min_len=min_paragraph_length,
+        threshold=threshold,
+        max_rows=max_rows,
+    )
+    return docs.select("path", "content", qlist.alias("questions")).mapInPandas(
+        body, schema=out_schema
+    )
 
 
 def stub_relevance_scores(

@@ -8,9 +8,12 @@ materialization becomes optional checkpoints.
 - demo1 (§3.2): CSV/parquet → snakify → tables → LEFT JOIN CTAS → aggregate
   (ref: notebooks/demo1[depracated]/demo1-create-tables.ipynb,
   demo1-join-tables.ipynb).
-- inference (§3.1): binary docs → extract → crossJoin(questions) → one
-  scoring pass (relevance, threshold, QA answers in a single mapInPandas)
-  → ranked results table (ref: notebooks/demo2/inference.pipeline).
+- inference (§3.1): binary docs → extract → question fan-out → relevance,
+  threshold, QA answers → ranked results table
+  (ref: notebooks/demo2/inference.pipeline).  On a folder with at least
+  one file per core, extraction, fan-out and scoring are ONE mapInPandas
+  pass per document; a narrower folder extracts, repartitions and scores
+  in a second pass so every core works.
 """
 
 from __future__ import annotations
@@ -26,10 +29,10 @@ from .functions.text import (
     year_in_question,
 )
 from .operators.curation import farm_zero_shift, find_answer_start_udf, negative_sample
-from .operators.inference import rank_answers, score_pairs
+from .operators.inference import extract_and_score, rank_answers, score_pairs
 from .operators.relational import dedup_keep_first, train_dev_split
 from .operators.reshape import explode_paragraphs, nest_to_squad
-from .sources.extraction import run_folder
+from .sources.extraction import extract_text, select_documents
 from .sources.files import write_table
 
 
@@ -288,21 +291,32 @@ def inference_pipeline(
     relevance_threshold: float = 0.5,
     top_k: int = 4,
     results_table: str | None = None,
+    model: str = "stub",
 ) -> DataFrame:
     """§3.1 — the full PDF→results-table DAG as one lazy plan:
-    binaryFile scan → extract (S1) → question fan-out (J3) → one scoring
-    stage: relevance (M1), threshold, QA (M2) → no-answer boost (F19) →
-    top-k (W1).  The reference ran this as 4 Kubeflow pods over 29.3 h for
-    144 PDFs on one node; here every stage parallelizes per document, the
-    plan has two Python stages (extraction and the scorer), and building
-    it starts no Spark job."""
-    paragraphs = run_folder(spark, pdf_dir, processed=processed).withColumnRenamed(
-        "paragraph", "text"
-    )
-    pairs = paragraphs.crossJoin(F.broadcast(questions)).select(
-        "pdf_name", "page", "kpi_id", "question", "text"
-    )
-    answered = score_pairs(pairs, threshold=relevance_threshold, qa=True)
+    binaryFile scan → extract (S1) → question fan-out (J3) → relevance
+    (M1), threshold, QA (M2) → no-answer boost (F19) → top-k (W1).  The
+    reference ran this as 4 Kubeflow pods over 29.3 h for 144 PDFs on one
+    node; here every stage parallelizes per document and building the plan
+    starts no Spark job.
+
+    A folder with at least ``defaultParallelism`` files runs S1 through M2
+    as one Python stage (``extract_and_score``): one task per document
+    batch, no paragraph crossing a Python boundary.  A narrower folder
+    extracts, spreads the paragraphs over ``defaultParallelism``
+    partitions, fans them out over the broadcast questions and scores them
+    with ``score_pairs`` — two Python stages, but every core scores.
+    ``model`` is the scoring backend spec ("stub" or a checkpoint path),
+    resolved once per worker."""
+    docs, narrow = select_documents(spark, pdf_dir, processed=processed)
+    if narrow:
+        paragraphs = extract_text(docs).repartition(spark.sparkContext.defaultParallelism)
+        pairs = paragraphs.withColumnRenamed("paragraph", "text").crossJoin(
+            F.broadcast(questions)
+        ).select("pdf_name", "page", "kpi_id", "question", "text")
+        answered = score_pairs(pairs, model=model, threshold=relevance_threshold, qa=True)
+    else:
+        answered = extract_and_score(docs, questions, threshold=relevance_threshold, model=model)
     ranked = rank_answers(
         answered, group_cols=["pdf_name", "kpi_id"], top_k=top_k, tiebreak=["page", "text"]
     )

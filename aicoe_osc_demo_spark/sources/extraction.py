@@ -8,8 +8,8 @@ Reference semantics being re-expressed:
   alphabetic chars dropped
   (ref: /root/reference/src/components/preprocessing/pdf_text_extractor.py:54-117;
   threshold notebooks/demo2/settings.yaml:13).
-- S2 ``run_folder``: rglob *.pdf, optional semi-join against the annotation
-  workbooks' source_file column, skip-already-processed
+- S2 ``select_documents`` / ``run_folder``: rglob *.pdf, optional semi-join
+  against the annotation workbooks' source_file column, skip-already-processed
   (ref: pdf_text_extractor.py:129-191).
 - S3 table-detector scan: per-page bbox inference at threshold 0.85
   (ref: pdf_table_extractor.py:149-213, config notebooks/demo2/config.py:46-52).
@@ -177,29 +177,33 @@ def _alpha_len(s: str) -> int:
     return sum(1 for ch in s if ch.isalpha())
 
 
+def _doc_paragraphs(path: str, content, min_len: int) -> Iterator[tuple[str, int, str]]:
+    """S1 for one document: (pdf_name, page, paragraph) rows.  Paragraphs
+    split on blank lines; those with fewer than ``min_len`` alphabetic
+    characters are dropped — exactly the reference filter
+    (pdf_text_extractor.py:72-77)."""
+    name = path.rsplit("/", 1)[-1]
+    for pno, page_text in enumerate(_decode_pages(bytes(content))):
+        for para in page_text.split("\n\n"):
+            para = para.strip()
+            if _alpha_len(para) >= min_len:
+                yield name, pno, para
+
+
 def extract_text(
     binary_df: DataFrame, min_paragraph_length: int = 30
 ) -> DataFrame:
-    """S1 — binary documents → long (pdf_name, page, paragraph) DataFrame.
-
-    Paragraphs split on blank lines; paragraphs with fewer than
-    ``min_paragraph_length`` alphabetic characters dropped — exactly the
-    reference filter (pdf_text_extractor.py:72-77).
-    """
+    """S1 — binary documents → long (pdf_name, page, paragraph) DataFrame,
+    one ``_doc_paragraphs`` call per document."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            names, pages, paras = [], [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                name = path.rsplit("/", 1)[-1]
-                for pno, page_text in enumerate(_decode_pages(bytes(content))):
-                    for para in page_text.split("\n\n"):
-                        para = para.strip()
-                        if _alpha_len(para) >= min_paragraph_length:
-                            names.append(name)
-                            pages.append(pno)
-                            paras.append(para)
-            yield pd.DataFrame({"pdf_name": names, "page": pages, "paragraph": paras})
+            rows = [
+                row
+                for path, content in zip(pdf["path"], pdf["content"])
+                for row in _doc_paragraphs(path, content, min_paragraph_length)
+            ]
+            yield pd.DataFrame(rows, columns=PARAGRAPH_SCHEMA.fieldNames())
 
     return binary_df.select("path", "content").mapInPandas(batches, schema=PARAGRAPH_SCHEMA)
 
@@ -342,6 +346,36 @@ def extract_table_cells(paragraphs: DataFrame, bboxes: DataFrame) -> DataFrame:
     )
 
 
+def select_documents(
+    spark: SparkSession,
+    input_dir: str,
+    annotated_names: DataFrame | None = None,
+    processed: DataFrame | None = None,
+    glob: str = "*.pdf",
+) -> tuple[DataFrame, bool]:
+    """S2 + P10 — the folder scan: binaryFile scan, optional left-semi join
+    against annotation source_file names, anti-join against the processed
+    ledger (pdf_text_extractor.py:129-191).  Returns ``(docs, narrow)``.
+
+    Both joins broadcast their (one row per document) side, so ``docs``
+    keeps the scan's one-partition-per-file layout.  ``narrow`` is true
+    when the folder has fewer files than ``defaultParallelism``; it reads
+    the file count the scan's file index already holds, so no Spark job
+    runs.
+    """
+    from .files import read_binary_docs
+
+    docs = read_binary_docs(spark, input_dir, glob)
+    narrow = len(docs.inputFiles()) < spark.sparkContext.defaultParallelism
+    docs = docs.withColumn("pdf_name", F.element_at(F.split(F.col("path"), "/"), -1))
+    if annotated_names is not None:
+        docs = docs.join(F.broadcast(annotated_names), on="pdf_name", how="left_semi")
+    if processed is not None:
+        ledger = processed.select("pdf_name").distinct()
+        docs = docs.join(F.broadcast(ledger), on="pdf_name", how="left_anti")
+    return docs, narrow
+
+
 def run_folder(
     spark: SparkSession,
     input_dir: str,
@@ -350,29 +384,11 @@ def run_folder(
     min_paragraph_length: int = 30,
     glob: str = "*.pdf",
 ) -> DataFrame:
-    """S2 + P10 — the folder-scan driver: binaryFile scan, optional left-semi
-    join against annotation source_file names, anti-join against the
-    processed ledger, then S1 extraction (pdf_text_extractor.py:129-191).
-
-    Both joins broadcast their (one row per document) side, so extraction
-    keeps the scan's one-partition-per-file layout.  The width gate reads
-    the file count the scan's file index already holds — no Spark job —
-    and spreads the paragraphs over ``defaultParallelism`` partitions only
-    when the folder has fewer files than that, so a small batch still
-    scores on every core downstream.
-    """
-    from .files import read_binary_docs
-
-    docs = read_binary_docs(spark, input_dir, glob)
-    width = spark.sparkContext.defaultParallelism
-    narrow = len(docs.inputFiles()) < width
-    docs = docs.withColumn("pdf_name", F.element_at(F.split(F.col("path"), "/"), -1))
-    if annotated_names is not None:
-        docs = docs.join(F.broadcast(annotated_names), on="pdf_name", how="left_semi")
-    if processed is not None:
-        ledger = processed.select("pdf_name").distinct()
-        docs = docs.join(F.broadcast(ledger), on="pdf_name", how="left_anti")
+    """S2 + S1 — ``select_documents``, then extraction.  A narrow folder's
+    paragraphs are spread over ``defaultParallelism`` partitions, so a
+    small batch still scores on every core downstream."""
+    docs, narrow = select_documents(spark, input_dir, annotated_names, processed, glob)
     paragraphs = extract_text(docs, min_paragraph_length)
     if narrow:
-        return paragraphs.repartition(width)
+        return paragraphs.repartition(spark.sparkContext.defaultParallelism)
     return paragraphs
