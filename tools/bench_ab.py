@@ -8,9 +8,10 @@ build what they run from their own source.  For every seed the two sides
 run ``perfbench/run.py --trace 0`` back to back, alternating which runs
 first.  The summary gives, per end-to-end metric, each side's median
 [lower quartile - upper quartile], how many pairs the second revision won,
-and whether the gap between the medians exceeds the first revision's IQR:
-the rule a claimed gain must meet.  The script only shells out to the
-benchmark; it measures nothing itself.
+whether the gap between the medians exceeds the first revision's IQR (the
+rule a claimed gain must meet), and a regression verdict against the
+metric's ``bound`` in ``BENCHMARK.json`` (see ``regression_verdict``).  The
+script only shells out to the benchmark; it measures nothing itself.
 
 A working tree with uncommitted changes can be compared through the commit
 ``git stash create`` prints after ``git add -A``.
@@ -60,24 +61,47 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def summarize(runs: list[list[dict]], revs: list[str], better: dict[str, str]) -> None:
-    """Per metric: both sides' median [IQR], B's wins, and the gain rule."""
+def regression_verdict(a: list[float], b: list[float], better: str, bound: float) -> str:
+    """Whether B regressed against A on one metric, by the rule a change is
+    judged by; ``bound`` is a fraction of A's median.
+
+    ``regressed``: B's median is worse than A's by more than the bound.
+    ``unresolved``: A's IQR over its median exceeds the bound, so A alone
+    spreads too widely to tell, and not every B run beats every A run.
+    ``ok``: otherwise.
+    """
+    sign = 1 if better == "lower" else -1
+    (a1, am, a3), (_, bm, _) = quartiles(a), quartiles(b)
+    if sign * (bm - am) > bound * abs(am):
+        return "regressed"
+    b_beats_all = max(b) < min(a) if better == "lower" else min(b) > max(a)
+    if (a3 - a1) > bound * abs(am) and not b_beats_all:
+        return "unresolved"
+    return "ok"
+
+
+def summarize(runs: list[list[dict]], revs: list[str], metrics: dict[str, dict]) -> None:
+    """Per metric: both sides' median [IQR], B's wins, the gain rule and the
+    regression verdict."""
     a, b = runs
     print(f"\n{len(a)} pairs; A = {revs[0]}, B = {revs[1]}")
     print("failed queries: " + ", ".join(
         f"{side} {sum(r['failed'] for r in rs)}/{sum(r['attempted'] for r in rs)}"
         for side, rs in zip("AB", runs)))
-    print(f"{'metric':<13} {'A median [IQR]':<26} {'B median [IQR]':<26} {'B wins':<7} gap > A IQR")
-    for name, direction in better.items():
+    print(f"{'metric':<13} {'A median [IQR]':<26} {'B median [IQR]':<26} {'B wins':<7} "
+          f"{'gap > A IQR':<22} regression")
+    for name, metric in metrics.items():
+        direction = metric["better"]
         va = [r["metrics"][name]["value"] for r in a]
         vb = [r["metrics"][name]["value"] for r in b]
         sign = 1 if direction == "lower" else -1
         wins = sum(sign * (x - y) > 0 for x, y in zip(va, vb))
         (a1, am, a3), (b1, bm, b3) = quartiles(va), quartiles(vb)
         gap = sign * (am - bm)
+        gain = f"{'yes' if gap > a3 - a1 else 'no'} ({gap:+.3f} vs {a3 - a1:.3f})"
         print(f"{name:<13} {f'{am:.3f} [{a1:.3f}-{a3:.3f}]':<26} {f'{bm:.3f} [{b1:.3f}-{b3:.3f}]':<26} "
-              f"{f'{wins}/{len(va)}':<7} {'yes' if gap > a3 - a1 else 'no'} "
-              f"({gap:+.3f} vs {a3 - a1:.3f})")
+              f"{f'{wins}/{len(va)}':<7} {gain:<22} "
+              f"{regression_verdict(va, vb, direction, metric['bound'])}")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -96,7 +120,7 @@ def main(argv: list[str] | None = None) -> int:
     revs = [args.rev_a, args.rev_b]
     trees = [export(rev, work / side) for side, rev in zip("AB", revs)]
     bench = json.loads((trees[0] / "BENCHMARK.json").read_text())
-    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    metrics = {m["name"]: m for m in bench["end_to_end"]}
     runs: list[list[dict]] = [[], []]
     for i, seed in enumerate(args.seeds):
         for side in (0, 1) if i % 2 == 0 else (1, 0):
@@ -105,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
             vals = " ".join(f"{k}={v['value']:.3f}" for k, v in res["metrics"].items())
             print(f"seed {seed} {'AB'[side]}: failed {res['failed']}/{res['attempted']} {vals}",
                   flush=True)
-    summarize(runs, revs, better)
+    summarize(runs, revs, metrics)
     return 0
 
 
