@@ -16,12 +16,17 @@ text_kpi_infer.py:46-68,180-232).  The Spark shape:
     fanned out (crossJoin(broadcast(questions)), J3); ``stub_relevance_scores``
     and ``stub_qa_answers`` are its two one-model forms;
   - ``extract_and_score`` over raw documents: extraction (S1), the question
-    fan-out in pandas and both models in ONE Python pass per document, so
-    the paragraphs never cross a Python boundary.  Every Python task pays
-    a fixed worker-side start-up cost, so fewer Python stages is fewer
-    tasks paying it.
-- no-answer boost (F19) + top-k ranking (W1) stay relational
-  (``rank_answers``), as does the no-answer aggregation (A2).
+    fan-out in pandas, both models, the no-answer boost (F19) and the
+    top-k (W1) in ONE Python pass per document, so neither paragraphs nor
+    scored pairs cross a Python boundary, and what leaves the task is
+    already the results rows.  Every Python task pays a fixed worker-side
+    start-up cost, so fewer Python stages is fewer tasks paying it.
+- F19 + W1 have two forms that return the same rows: ``rank_answers``
+  (relational: a window over a hash shuffle on the group keys) for pairs
+  spread over partitions, as ``score_pairs`` and ``qa_pipeline`` leave
+  them; ``rank_frame`` (pandas) for a frame that holds whole groups, as
+  one document's pairs do inside ``extract_and_score``.  The no-answer
+  aggregation (A2) stays relational.
 
 Transformer weights are not available in this container, so the default
 scorer is a DETERMINISTIC STUB — a pure arithmetic function of the input
@@ -251,6 +256,38 @@ def score_pairs(
 
 
 _PAIR_FIELDS = ["pdf_name", "page", "kpi_id", "question", "text"]
+# The results table's ranking: top-k per (pdf_name, kpi_id), ties broken by
+# page, then text.  Both branches of pipelines.inference_pipeline rank by it.
+RESULT_GROUP = ["pdf_name", "kpi_id"]
+RESULT_TIEBREAK = ["page", "text"]
+_RESULT_FIELDS = ["pdf_name", "kpi_id", "question", "page", "final_answer", "score"]
+
+
+def rank_frame(answered: pd.DataFrame, top_k: int, no_ans_boost: float = -0.015) -> pd.DataFrame:
+    """``rank_answers(answered, RESULT_GROUP, top_k, no_ans_boost,
+    RESULT_TIEBREAK)`` over a pandas frame that holds whole groups: the
+    no-answer boost (F19), ``final_answer``, and the top-k rows per
+    (pdf_name, kpi_id) (W1) by ``score`` desc, then page and text asc.
+
+    It keeps the rows, with the values, that ``rank_answers`` keeps once
+    the same frame has crossed Arrow into Spark.  That crossing turns a NaN
+    into null, so a NaN here follows Spark's null rules, not its NaN rules:
+    a NaN ``score`` sorts last, and a comparison with NaN is false, which
+    keeps the answer.  Strings sort by code point, the order of the UTF-8
+    bytes Spark compares.  Page and text must hold no nulls (Spark sorts
+    them first, this sort last); extracted paragraphs never do.
+    """
+    pure = answered["no_ans_score"] + no_ans_boost
+    ranked = answered.assign(
+        pure_no_ans_score=pure,
+        final_answer=answered["answer"].mask(pure > answered["score"], "no_answer"),
+    ).sort_values(
+        ["score", *RESULT_TIEBREAK],
+        ascending=[False] + [True] * len(RESULT_TIEBREAK),
+        na_position="last",
+        kind="stable",
+    )
+    return ranked.groupby(RESULT_GROUP, dropna=False, sort=False).head(top_k)
 
 
 def _extract_and_score_batches(
@@ -259,10 +296,14 @@ def _extract_and_score_batches(
     min_len: int,
     threshold: float | None,
     max_rows: int,
+    top_k: int,
 ) -> Iterator[pd.DataFrame]:
     """Body of ``extract_and_score``: per document, decode its paragraphs,
-    fan them out over the question list, and score the pairs in chunks of
-    at most ``max_rows`` (no limit when ``max_rows`` is not positive)."""
+    fan them out over the question list, score the pairs in chunks of at
+    most ``max_rows`` (no limit when ``max_rows`` is not positive) and fold
+    each chunk into the document's running top-k; yield the document's
+    ranked rows.  Next to the document's unscored pairs, a task holds one
+    scored chunk plus at most ``top_k`` rows per question."""
     backend = _get_model(model)
     out_cols = _PAIR_FIELDS + [f.name for f in _QA_FIELDS]
     for pdf in batches:
@@ -274,12 +315,18 @@ def _extract_and_score_batches(
             questions = pd.DataFrame(list(qs), columns=["kpi_id", "question"])
             pairs = paras.merge(questions, how="cross")[_PAIR_FIELDS]
             step = max_rows if max_rows > 0 else max(len(pairs), 1)
+            kept = None
             for lo in range(0, len(pairs), step):
                 chunk = pairs.iloc[lo : lo + step].copy()
-                yield _score_frame(
+                scored = _score_frame(
                     backend, chunk, "question", "text",
                     relevance=True, threshold=threshold, qa=True, out_cols=out_cols,
                 )
+                if kept is not None:
+                    scored = pd.concat([kept, scored], ignore_index=True)
+                kept = rank_frame(scored, top_k)
+            if kept is not None and len(kept):
+                yield kept[_RESULT_FIELDS]
 
 
 def extract_and_score(
@@ -287,31 +334,42 @@ def extract_and_score(
     questions: DataFrame,
     min_paragraph_length: int = 30,
     threshold: float | None = None,
+    top_k: int = 4,
     model: str = "stub",
 ) -> DataFrame:
-    """S1 → J3 → M1 → M2 as ONE mapInPandas over the documents: each task
-    decodes a document's paragraphs, fans them out over the question list
-    in pandas, then scores relevance, applies ``threshold`` and runs QA on
-    the survivors — the rows ``score_pairs(..., threshold, qa=True)``
-    returns over ``extract_text(docs)`` × ``questions``.
+    """S1 → J3 → M1 → M2 → F19 → W1 as ONE mapInPandas over the documents:
+    each task decodes a document's paragraphs, fans them out over the
+    question list in pandas, scores relevance, applies ``threshold``, runs
+    QA on the survivors and ranks the answers with ``rank_frame``.  It
+    returns the (pdf_name, kpi_id, question, page, final_answer, score)
+    columns of ``rank_answers(score_pairs(..., threshold, qa=True),
+    RESULT_GROUP, top_k, tiebreak=RESULT_TIEBREAK)`` over
+    ``extract_text(docs)`` × ``questions``, with ``score`` unrounded.
+
+    Ranking inside the task is exact only when every row of a (pdf_name,
+    kpi_id) group is in it, i.e. when no two documents in ``docs`` share a
+    ``pdf_name`` (``select_documents`` reports whether they do).  Then the
+    plan needs no shuffle, sort or window after the Python stage.
 
     ``docs`` has (path, content) rows as from ``select_documents``;
     ``questions`` has (kpi_id, question).  The question list reaches every
     document row as one scalar-subquery value
     (``collect_list(struct(kpi_id, question))``), so the plan has no join
-    and the paragraphs never cross a Python boundary.  Scored chunks hold
-    at most ``spark.sql.execution.arrow.maxRecordsPerBatch`` pairs, which
-    bounds a task's memory like the Arrow batches of ``score_pairs``.
+    and neither paragraphs nor scored pairs cross a Python boundary.  Pairs
+    are scored in chunks of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``, and the top-k is kept
+    across chunks, which bounds a task's memory like the Arrow batches of
+    ``score_pairs``.
     """
     qlist = questions.agg(F.collect_list(F.struct("kpi_id", "question"))).scalar()
     q_fields = [questions.schema[c] for c in ("kpi_id", "question")]
     out_schema = StructType(
         [
             StructField("pdf_name", StringType()),
-            StructField("page", IntegerType()),
             *(StructField(f.name, f.dataType, f.nullable) for f in q_fields),
-            StructField("text", StringType()),
-            *_QA_FIELDS,
+            StructField("page", IntegerType()),
+            StructField("final_answer", StringType()),
+            StructField("score", DoubleType()),
         ]
     )
     max_rows = int(docs.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
@@ -321,6 +379,7 @@ def extract_and_score(
         min_len=min_paragraph_length,
         threshold=threshold,
         max_rows=max_rows,
+        top_k=top_k,
     )
     return docs.select("path", "content", qlist.alias("questions")).mapInPandas(
         body, schema=out_schema
@@ -408,7 +467,8 @@ def rank_answers(
 ) -> DataFrame:
     """The QA tail over (answer, score, no_ans_score) rows: apply the
     no-answer boost (F19), pick ``final_answer``, and keep the top-k answers
-    per group (W1)."""
+    per group (W1).  ``rank_frame`` is the same tail over one pandas frame
+    that holds whole groups."""
     answered = answered.withColumn(
         "pure_no_ans_score", F.col("no_ans_score") + F.lit(no_ans_boost)
     ).withColumn(

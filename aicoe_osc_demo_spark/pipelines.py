@@ -11,9 +11,11 @@ materialization becomes optional checkpoints.
 - inference (§3.1): binary docs → extract → question fan-out → relevance,
   threshold, QA answers → ranked results table
   (ref: notebooks/demo2/inference.pipeline).  On a folder with at least
-  one file per core, extraction, fan-out and scoring are ONE mapInPandas
-  pass per document; a narrower folder extracts, repartitions and scores
-  in a second pass so every core works.
+  one file per core and no two files of the same name, extraction,
+  fan-out, scoring and ranking are ONE mapInPandas pass per document, and
+  its rows go to the results table with no shuffle; otherwise the scored
+  pairs are ranked relationally, and a narrower folder extracts,
+  repartitions and scores in a second pass so every core works.
 """
 
 from __future__ import annotations
@@ -29,7 +31,13 @@ from .functions.text import (
     year_in_question,
 )
 from .operators.curation import farm_zero_shift, find_answer_start_udf, negative_sample
-from .operators.inference import extract_and_score, rank_answers, score_pairs
+from .operators.inference import (
+    RESULT_GROUP,
+    RESULT_TIEBREAK,
+    extract_and_score,
+    rank_answers,
+    score_pairs,
+)
 from .operators.relational import dedup_keep_first, train_dev_split
 from .operators.reshape import explode_paragraphs, nest_to_squad
 from .sources.extraction import extract_text, select_documents
@@ -300,26 +308,36 @@ def inference_pipeline(
     node; here every stage parallelizes per document and building the plan
     starts no Spark job.
 
-    A folder with at least ``defaultParallelism`` files runs S1 through M2
-    as one Python stage (``extract_and_score``): one task per document
-    batch, no paragraph crossing a Python boundary.  A narrower folder
-    extracts, spreads the paragraphs over ``defaultParallelism``
-    partitions, fans them out over the broadcast questions and scores them
-    with ``score_pairs`` — two Python stages, but every core scores.
+    A folder with at least ``defaultParallelism`` files, no two of them
+    with the same name, runs S1 through W1 as one Python stage
+    (``extract_and_score``): one task per document batch, each document
+    ranked on its own as the reference ranks each PDF, so the plan is scan
+    → ledger anti-join → Python stage → write, with no shuffle.  Otherwise
+    the pairs are scored with ``score_pairs`` and ranked relationally
+    (``rank_answers``), because a (pdf_name, kpi_id) group may span
+    documents; a narrower folder also spreads its paragraphs over
+    ``defaultParallelism`` partitions before they fan out over the
+    broadcast questions, so every core scores.  Both paths rank by
+    ``RESULT_GROUP`` and ``RESULT_TIEBREAK`` and return the same rows.
     ``model`` is the scoring backend spec ("stub" or a checkpoint path),
     resolved once per worker."""
-    docs, narrow = select_documents(spark, pdf_dir, processed=processed)
-    if narrow:
-        paragraphs = extract_text(docs).repartition(spark.sparkContext.defaultParallelism)
+    docs, narrow, unique_names = select_documents(spark, pdf_dir, processed=processed)
+    if narrow or not unique_names:
+        paragraphs = extract_text(docs)
+        if narrow:
+            paragraphs = paragraphs.repartition(spark.sparkContext.defaultParallelism)
         pairs = paragraphs.withColumnRenamed("paragraph", "text").crossJoin(
             F.broadcast(questions)
         ).select("pdf_name", "page", "kpi_id", "question", "text")
         answered = score_pairs(pairs, model=model, threshold=relevance_threshold, qa=True)
+        ranked = rank_answers(
+            answered, group_cols=RESULT_GROUP, top_k=top_k, tiebreak=RESULT_TIEBREAK
+        )
     else:
-        answered = extract_and_score(docs, questions, threshold=relevance_threshold, model=model)
-    ranked = rank_answers(
-        answered, group_cols=["pdf_name", "kpi_id"], top_k=top_k, tiebreak=["page", "text"]
-    )
+        ranked = extract_and_score(
+            docs, questions, threshold=relevance_threshold, top_k=top_k, model=model
+        )
+    # rounded in Spark: Python's round() rounds halves to even, Spark's up
     results = ranked.select(
         "pdf_name", "kpi_id", "question", "page", "final_answer", F.round("score", 6).alias("score")
     )

@@ -352,28 +352,33 @@ def select_documents(
     annotated_names: DataFrame | None = None,
     processed: DataFrame | None = None,
     glob: str = "*.pdf",
-) -> tuple[DataFrame, bool]:
+) -> tuple[DataFrame, bool, bool]:
     """S2 + P10 — the folder scan: binaryFile scan, optional left-semi join
     against annotation source_file names, anti-join against the processed
-    ledger (pdf_text_extractor.py:129-191).  Returns ``(docs, narrow)``.
+    ledger (pdf_text_extractor.py:129-191).  Returns
+    ``(docs, narrow, unique_names)``.
 
     Both joins broadcast their (one row per document) side, so ``docs``
     keeps the scan's one-partition-per-file layout.  ``narrow`` is true
-    when the folder has fewer files than ``defaultParallelism``; it reads
-    the file count the scan's file index already holds, so no Spark job
-    runs.
+    when the scan has fewer files than ``defaultParallelism``;
+    ``unique_names`` is true when no two scanned files share a base name,
+    so ``pdf_name`` names one document (a glob over several folders may
+    break that).  Both read the file list the scan's file index already
+    holds, so no Spark job runs.
     """
     from .files import read_binary_docs
 
     docs = read_binary_docs(spark, input_dir, glob)
-    narrow = len(docs.inputFiles()) < spark.sparkContext.defaultParallelism
+    names = [f.rsplit("/", 1)[-1] for f in docs.inputFiles()]
+    narrow = len(names) < spark.sparkContext.defaultParallelism
+    unique_names = len(set(names)) == len(names)
     docs = docs.withColumn("pdf_name", F.element_at(F.split(F.col("path"), "/"), -1))
     if annotated_names is not None:
         docs = docs.join(F.broadcast(annotated_names), on="pdf_name", how="left_semi")
     if processed is not None:
         ledger = processed.select("pdf_name").distinct()
         docs = docs.join(F.broadcast(ledger), on="pdf_name", how="left_anti")
-    return docs, narrow
+    return docs, narrow, unique_names
 
 
 def run_folder(
@@ -387,7 +392,7 @@ def run_folder(
     """S2 + S1 — ``select_documents``, then extraction.  A narrow folder's
     paragraphs are spread over ``defaultParallelism`` partitions, so a
     small batch still scores on every core downstream."""
-    docs, narrow = select_documents(spark, input_dir, annotated_names, processed, glob)
+    docs, narrow, _ = select_documents(spark, input_dir, annotated_names, processed, glob)
     paragraphs = extract_text(docs, min_paragraph_length)
     if narrow:
         return paragraphs.repartition(spark.sparkContext.defaultParallelism)
