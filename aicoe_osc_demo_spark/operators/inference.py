@@ -260,11 +260,14 @@ _PAIR_FIELDS = ["pdf_name", "page", "kpi_id", "question", "text"]
 # page, then text.  Both branches of pipelines.inference_pipeline rank by it.
 RESULT_GROUP = ["pdf_name", "kpi_id"]
 RESULT_TIEBREAK = ["page", "text"]
+# Added to no_ans_score before it is compared with the answer's score (F19);
+# rank_frame and rank_answers both read it.
+NO_ANS_BOOST = -0.015
 _RESULT_FIELDS = ["pdf_name", "kpi_id", "question", "page", "final_answer", "score"]
 
 
-def rank_frame(answered: pd.DataFrame, top_k: int, no_ans_boost: float = -0.015) -> pd.DataFrame:
-    """``rank_answers(answered, RESULT_GROUP, top_k, no_ans_boost,
+def rank_frame(answered: pd.DataFrame, top_k: int) -> pd.DataFrame:
+    """``rank_answers(answered, RESULT_GROUP, top_k, NO_ANS_BOOST,
     RESULT_TIEBREAK)`` over a pandas frame that holds whole groups: the
     no-answer boost (F19), ``final_answer``, and the top-k rows per
     (pdf_name, kpi_id) (W1) by ``score`` desc, then page and text asc.
@@ -277,7 +280,7 @@ def rank_frame(answered: pd.DataFrame, top_k: int, no_ans_boost: float = -0.015)
     bytes Spark compares.  Page and text must hold no nulls (Spark sorts
     them first, this sort last); extracted paragraphs never do.
     """
-    pure = answered["no_ans_score"] + no_ans_boost
+    pure = answered["no_ans_score"] + NO_ANS_BOOST
     ranked = answered.assign(
         pure_no_ans_score=pure,
         final_answer=answered["answer"].mask(pure > answered["score"], "no_answer"),
@@ -462,7 +465,7 @@ def rank_answers(
     answered: DataFrame,
     group_cols: list[str],
     top_k: int = 4,
-    no_ans_boost: float = -0.015,
+    no_ans_boost: float = NO_ANS_BOOST,
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """The QA tail over (answer, score, no_ans_score) rows: apply the
@@ -486,7 +489,7 @@ def qa_pipeline(
     relevant: DataFrame,
     group_cols: list[str],
     top_k: int = 4,
-    no_ans_boost: float = -0.015,
+    no_ans_boost: float = NO_ANS_BOOST,
     tiebreak: list[str] | None = None,
     model: str = "stub",
 ) -> DataFrame:

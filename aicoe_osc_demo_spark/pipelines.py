@@ -13,9 +13,9 @@ materialization becomes optional checkpoints.
   (ref: notebooks/demo2/inference.pipeline).  On a folder with at least
   one file per core and no two files of the same name, extraction,
   fan-out, scoring and ranking are ONE mapInPandas pass per document, and
-  its rows go to the results table with no shuffle; otherwise the scored
-  pairs are ranked relationally, and a narrower folder extracts,
-  repartitions and scores in a second pass so every core works.
+  its rows go to the results table with no shuffle; otherwise the folder
+  is extracted, repartitioned so every core works, and scored in a second
+  pass, and the scored pairs are ranked relationally.
 """
 
 from __future__ import annotations
@@ -313,19 +313,17 @@ def inference_pipeline(
     (``extract_and_score``): one task per document batch, each document
     ranked on its own as the reference ranks each PDF, so the plan is scan
     → ledger anti-join → Python stage → write, with no shuffle.  Otherwise
-    the pairs are scored with ``score_pairs`` and ranked relationally
-    (``rank_answers``), because a (pdf_name, kpi_id) group may span
-    documents; a narrower folder also spreads its paragraphs over
-    ``defaultParallelism`` partitions before they fan out over the
-    broadcast questions, so every core scores.  Both paths rank by
-    ``RESULT_GROUP`` and ``RESULT_TIEBREAK`` and return the same rows.
+    the paragraphs are spread over ``defaultParallelism`` partitions
+    before they fan out over the broadcast questions, so every core
+    scores; the pairs are scored with ``score_pairs`` and ranked
+    relationally (``rank_answers``), because a (pdf_name, kpi_id) group
+    may span documents.  Both paths rank by ``RESULT_GROUP``,
+    ``RESULT_TIEBREAK`` and ``NO_ANS_BOOST`` and return the same rows.
     ``model`` is the scoring backend spec ("stub" or a checkpoint path),
     resolved once per worker."""
     docs, narrow, unique_names = select_documents(spark, pdf_dir, processed=processed)
     if narrow or not unique_names:
-        paragraphs = extract_text(docs)
-        if narrow:
-            paragraphs = paragraphs.repartition(spark.sparkContext.defaultParallelism)
+        paragraphs = extract_text(docs).repartition(spark.sparkContext.defaultParallelism)
         pairs = paragraphs.withColumnRenamed("paragraph", "text").crossJoin(
             F.broadcast(questions)
         ).select("pdf_name", "page", "kpi_id", "question", "text")

@@ -308,7 +308,7 @@ def test_width_gate_wide_folder_adds_no_exchange(spark, tmp_path):
 def test_repeated_file_names_rank_across_documents(spark, tmp_path):
     # a glob over two folders that both hold r00.pdf: ranking per document
     # would keep TOP_K rows of each r00.pdf per question, so the pipeline
-    # ranks relationally, over both of them
+    # takes the staged path of a narrow folder and ranks over both of them
     width = spark.sparkContext.defaultParallelism
     root = tmp_path / "folders"
     root.mkdir()
@@ -327,6 +327,8 @@ def test_repeated_file_names_rank_across_documents(spark, tmp_path):
     assert sum(r.pdf_name == "r00.pdf" and r.kpi_id == "k1" for r in rows) == TOP_K
     assert _python_nodes(out) == 2
     assert [n for n in _document_side(out) if n.startswith("Window")]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert f"RoundRobinPartitioning({width})" in plan
 
 
 _ANSWERED_SCHEMA = (
