@@ -878,8 +878,8 @@ def containment_pairs(
 
 
 # r14: eager vs lazy per-round checkpoints in dedup_clusters were A/B'd
-# (tools/ab_clusters_r14.py) expecting the k-core/label_propagation lazy
-# win — it does NOT transfer: lazy LOSES on llm_keep_canonical (4/4 reps)
+# expecting the k-core/label_propagation lazy win — it does NOT transfer:
+# lazy LOSES on llm_keep_canonical (4/4 reps)
 # and llm_leakage_safe_split (3/4) and washes elsewhere, because each
 # round references `labels` three times (two jump-join sides + neighbor
 # leg) and the lazy checkpoint defers materialization into a job that

@@ -1,4 +1,5 @@
-"""Session factory configuration, including GPU resource scheduling."""
+"""Session factory configuration, including GPU resource scheduling and the
+driver JVM's garbage collector."""
 
 from __future__ import annotations
 
@@ -10,10 +11,17 @@ import zipfile
 from pathlib import Path
 
 import pyspark
+import pytest
 
 from conftest import SF_DIR
 
-from aicoe_osc_demo_spark.session import default_cpus, get_spark, session_confs
+from aicoe_osc_demo_spark.session import (
+    JAVA_OPTION_ENV,
+    default_cpus,
+    get_spark,
+    parallel_gc_applies,
+    session_confs,
+)
 from aicoe_osc_demo_spark.worker_daemon import (
     archived_versions,
     archives_to_drop,
@@ -24,7 +32,10 @@ from aicoe_osc_demo_spark.worker_daemon import (
 ROOT = Path(__file__).resolve().parents[1]
 
 
-def test_default_confs_pin_determinism_and_aqe():
+def test_default_confs_pin_determinism_and_aqe(monkeypatch, tmp_path):
+    for name in JAVA_OPTION_ENV:
+        monkeypatch.delenv(name, raising=False)
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
     confs = session_confs(cpus="8")
     assert confs["spark.sql.session.timeZone"] == "UTC"
     assert confs["spark.sql.adaptive.enabled"] == "true"
@@ -33,7 +44,53 @@ def test_default_confs_pin_determinism_and_aqe():
     assert confs["spark.sql.legacy.parquet.nanosAsLong"] == "true"
     assert confs["spark.sql.codegen.cache.maxEntries"] == "8192"
     assert confs["spark.python.daemon.module"] == "aicoe_osc_demo_spark.worker_daemon"
+    assert confs["spark.driver.defaultJavaOptions"] == "-XX:+UseParallelGC"
     assert "spark.task.resource.gpu.amount" not in confs
+    # a collector the user's JVM options pick wins
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-XX:+UseSerialGC")
+    assert "spark.driver.defaultJavaOptions" not in session_confs(cpus="8")
+    monkeypatch.delenv("JAVA_TOOL_OPTIONS")
+    (tmp_path / "spark-defaults.conf").write_text("spark.driver.extraJavaOptions -XX:+UseZGC\n")
+    assert "spark.driver.defaultJavaOptions" not in session_confs(cpus="8")
+
+
+# perfbench's own submit arguments, which must leave the flag on
+PERFBENCH_SUBMIT_ARGS = (
+    "--conf spark.sql.warehouse.dir=/w/warehouse --conf spark.ui.showConsoleProgress=false "
+    "--driver-java-options '-XX:-UsePerfData -Djava.io.tmpdir=/w/tmp' pyspark-shell"
+)
+
+
+def test_parallel_gc_applies_without_a_collector_choice():
+    assert parallel_gc_applies({}, "")
+    assert parallel_gc_applies({"PYSPARK_SUBMIT_ARGS": PERFBENCH_SUBMIT_ARGS}, "")
+    assert parallel_gc_applies(
+        {"SPARK_SUBMIT_OPTS": "-Divy.home=/ivy -Dspark.jars.ivy=/ivy",
+         "JAVA_TOOL_OPTIONS": "-XX:+UseStringDeduplication -XX:-UseGCOverheadLimit"},
+        "# spark.driver.defaultJavaOptions -XX:+UseG1GC\n"
+        "spark.driver.extraJavaOptions -XX:-UsePerfData\n"
+        "spark.executor.extraJavaOptions -XX:+UseG1GC\n"
+        "spark.driver.memory 4g\n",
+    )
+
+
+@pytest.mark.parametrize("name", JAVA_OPTION_ENV)
+def test_a_collector_in_the_environment_wins(name):
+    for flag in ("-XX:+UseG1GC", "-XX:+UseSerialGC", "-XX:-UseParallelGC"):
+        assert not parallel_gc_applies({name: f"-Xss4m {flag}"}, ""), flag
+
+
+@pytest.mark.parametrize("text", [
+    "spark.driver.extraJavaOptions -Xss4m -XX:+UseG1GC",
+    "spark.driver.extraJavaOptions=-XX:+UseZGC",
+    "spark.driver.defaultJavaOptions   -XX:+UseShenandoahGC",
+    # get_spark's --conf would replace the user's defaults, collector or not
+    "spark.driver.defaultJavaOptions -Dfoo=bar",
+    "spark.driver.defaultJavaOptions: -Xss4m",
+])
+def test_spark_defaults_keep_the_users_options(text):
+    assert not parallel_gc_applies({}, f"spark.master local[2]\n  {text}\n")
+    assert not parallel_gc_applies({"PYSPARK_SUBMIT_ARGS": PERFBENCH_SUBMIT_ARGS}, text)
 
 
 def test_gpu_resource_confs_land():
@@ -61,9 +118,28 @@ def test_default_cpus_follows_the_host(monkeypatch):
     assert default_cpus() == "3"
 
 
-# Runs in its own interpreter: the codegen cache size is a static conf, so it
-# only lands in a JVM that get_spark starts.  Prints the live cache size and
-# the Janino compile count of each of three identical CATALOG_MIX sweeps.
+def child_env(**extra: str) -> dict[str, str]:
+    """The environment of a child interpreter that starts get_spark's JVM."""
+    return dict(os.environ, SPARK_DRIVER_MEMORY="1g", **extra,
+                PYTHONPATH=os.pathsep.join(p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p))
+
+
+def run_child(script: str, *args: str, env: dict[str, str] | None = None) -> dict:
+    """Run ``script`` in a fresh interpreter; the JSON of its last line."""
+    out = subprocess.run([sys.executable, "-c", script, *args], cwd=ROOT, env=env or child_env(),
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+# The garbage collectors of the session's JVM, by MXBean name.
+_COLLECTORS = ("[b.getName() for b in "
+               "spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()]")
+
+# Runs in its own interpreter: the codegen cache size and the driver's Java
+# options are static confs, so they only land in a JVM that get_spark
+# starts.  Prints the live cache size, the Janino compile count of each of
+# three identical CATALOG_MIX sweeps and the JVM's collectors.
 _SWEEPS = """
 import json, sys
 from aicoe_osc_demo_spark.plans import QUERIES
@@ -81,22 +157,38 @@ for _ in range(3):
 print(json.dumps({
     "max_entries": spark.conf.get("spark.sql.codegen.cache.maxEntries"),
     "compiles": compiles,
+    "collectors": %s,
 }))
 spark.stop()
-"""
+""" % _COLLECTORS
 
 
 def test_repeated_catalog_entries_reuse_compiled_code():
-    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g",
-               PYTHONPATH=os.pathsep.join(p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p))
-    out = subprocess.run([sys.executable, "-c", _SWEEPS, SF_DIR], cwd=ROOT, env=env,
-                         capture_output=True, text=True, timeout=600)
-    assert out.returncode == 0, out.stderr[-2000:]
-    result = json.loads(out.stdout.strip().splitlines()[-1])
+    result = run_child(_SWEEPS, SF_DIR)
     assert result["max_entries"] == "8192"
     # the first sweep compiles every class; repeats find them all cached
     assert result["compiles"][0] > 0
     assert result["compiles"][1:] == [0, 0], result["compiles"]
+    # get_spark's JVM runs the Parallel collector, not the default G1
+    assert sorted(result["collectors"]) == ["PS MarkSweep", "PS Scavenge"], result["collectors"]
+
+
+_STARTED = """
+import json
+from aicoe_osc_demo_spark.session import get_spark
+
+spark = get_spark(cpus="1")
+print(json.dumps({"rows": spark.range(3).count(), "collectors": %s}))
+spark.stop()
+""" % _COLLECTORS
+
+
+def test_a_collector_in_the_submit_args_wins():
+    # without the guard, the JVM would refuse two collectors and not start
+    env = child_env(PYSPARK_SUBMIT_ARGS="--driver-java-options -XX:+UseG1GC pyspark-shell")
+    result = run_child(_STARTED, env=env)
+    assert result["rows"] == 3
+    assert all(name.startswith("G1 ") for name in result["collectors"]), result["collectors"]
 
 
 ARCHIVES = [
@@ -184,12 +276,7 @@ spark.stop()
 
 
 def test_workers_import_pyspark_from_site_packages(tmp_path):
-    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g",
-               PYTHONPATH=os.pathsep.join(p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p))
-    out = subprocess.run([sys.executable, "-c", _WORKER, str(tmp_path)], cwd=ROOT, env=env,
-                         capture_output=True, text=True, timeout=600)
-    assert out.returncode == 0, out.stderr[-2000:]
-    result = json.loads(out.stdout.strip().splitlines()[-1])
+    result = run_child(_WORKER, str(tmp_path))
     worker = result["worker"]
     # the same site-packages pyspark the driver imports, not SPARK_HOME's zip
     assert "site-packages" in worker["pyspark"], worker
