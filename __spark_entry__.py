@@ -26,37 +26,39 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # Driver-verification scheduling: the per-round correctness gate checks the
-# FIRST 50 registry entries.  r14 window (VERDICT r13 "Next round" #3) =
-# (a) the 4 r06-rotation entries that rolled when the r13 window filled;
-# (b) the r13 rewrites the driver has not re-hashed post-change — r13
-# touched 64 entries through shared-operator edits but its window covered
-# only ~20 of them; the 10 biggest unwindowed rewrites named by the r13
-# verdict come first, then the remaining touched-but-unwindowed entries
-# (Lloyd/PQ family, same-key-window rewrites, input spreads,
-# bounded-table checkpoints, retention family, checkpoint-policy changes);
-# (c) every entry the r14 optimization round itself changed (shared
-# matched-postings rank fusion, novelty window, PQ LUT single-pass +
-# serving checkpoint, ivf norm hoist, mixture/curation checkpoints, chi2
-# gate, t-closeness two-level rollup) so the driver re-hashes this
-# round's rewrites.  Four r13-touched entries whose shared-operator
-# changes are already covered by in-window siblings yielded slots
-# (llm_tokenizer_fertility — BPE family, llm_bpe_* driver-green r13;
-# events_retention_halflife — built on in-window retention_cohorts;
-# llm_pmi_collocations / llm_heaps_law — the bounded-checkpoint pattern
-# verified via in-window llm_perplexity_buckets / quality_mann_kendall).
-# The two rows-only-by-design entries (llm_fuzzy_ratio_join,
-# ml_relevance_training_metrics) are pytest-pinned and take no slots;
-# their value-hashed companion entries stand in
-# (llm_fuzzy_candidates_profile below; ml_relevance_split_profile was
-# driver-green in r13).
+# FIRST 50 registry entries.  The window leads with (a) every entry whose
+# materialization path the cache.py consolidation changed: the token-budget
+# counts (persist -> shared checkpoint), the routed Lloyd gate (one width
+# probe), and each entry on an artifact-owning operator (IVF-PQ / PQ family,
+# PPJoin, PageRank, triangles, vocab coverage, DSIR, SemDeDup, MMR).  The
+# rest of the window (b) keeps the r13/r14 rewrites in their previous
+# order (the whole r14 window was driver-green); the nine r14-window
+# entries dropped to make room (chi2, novelty, BLEU pairs, the two mixture
+# samplers, ANN/IVF recall and topk, t-closeness) are unchanged since.  The two
+# rows-only-by-design entries (llm_fuzzy_ratio_join,
+# ml_relevance_training_metrics) are pytest-pinned and take no slots.
 _DRIVER_CHECK_PRIORITY = [
-    # --- (a) r06-rotation entries that rolled from the r13 window ---
+    # --- (a) entries whose materialization path changed ---
+    "llm_token_budget_plan",
+    "llm_kmeans_routed",
+    "llm_ivfpq_topk",
+    "llm_ivfpq_recall",
+    "llm_pq_codes",
+    "llm_pq_adc_topk",
+    "llm_pq_refine_topk",
+    "llm_pq_recall",
+    "llm_prefix_jaccard_join",
+    "llm_pagerank",
+    "llm_triangle_count",
+    "llm_vocab_coverage",
+    "llm_dsir_resample",
+    "llm_semdedup",
+    "llm_mmr_diverse_topk",
+    # --- (b) earlier r13/r14 rewrites ---
     "llm_dedup_clusters",
     "llm_lm_perplexity",
     "llm_segment_dedup",
     "join_anti",
-    # --- (b) r13/r14 rewrites not yet driver-hashed post-change ---
-    "llm_kmeans_routed",
     "llm_bm25_topk",
     "llm_rank_fusion",
     "events_retention_d1_d7",
@@ -67,8 +69,6 @@ _DRIVER_CHECK_PRIORITY = [
     "join_single_late_supplier",
     "llm_cosine_topk",
     "llm_retrieve_rerank",
-    "llm_ivfpq_recall",
-    "llm_ivfpq_topk",
     "join_top_supplier_share",
     "llm_centroid_outliers",
     "pipeline_llm_curation",
@@ -90,19 +90,6 @@ _DRIVER_CHECK_PRIORITY = [
     "llm_ndcg_eval",
     "window_percentile_bins",
     "ml_time_split_report",
-    "quality_chi2_independence",
-    # --- (c) entries the r14 optimization round changed ---
-    "llm_novelty_score",
-    "llm_bleu_doc_pairs",
-    "llm_mixture_sample",
-    "llm_temperature_mixture",
-    "llm_pq_adc_topk",
-    "llm_pq_refine_topk",
-    "llm_pq_recall",
-    "llm_ann_recall",
-    "llm_ivf_topk",
-    "llm_ivf_recall",
-    "privacy_t_closeness",
 ]
 
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import CacheScope, round_cut, shared
 from .relational import ensure_parallelism
 
 
@@ -231,7 +232,6 @@ def vocab_coverage(
     text_col: str = "text",
     id_col: str = "doc_id",
     round_to: int = 6,
-    cache_tokens: bool = True,
     scope=None,
 ) -> DataFrame:
     """Vocabulary coverage / OOV-rate audit: build the corpus's top-V token
@@ -250,19 +250,17 @@ def vocab_coverage(
     vocabulary — and therefore every rate — is oracle-replayable.
 
     The exploded token frame feeds BOTH the vocab aggregate and the
-    per-doc join side; ``cache_tokens`` persists it so the corpus is
-    scanned and split once, not twice.  Lifetime (``cache.py``
-    contract): the per-doc result is pinned and the token persist
-    released by default; a passed ``scope`` keeps the plan lazy and
-    owns the release.
+    per-doc join side; it is persisted so the corpus is scanned and split
+    once, not twice.  Lifetime (``cache.py`` contract): the per-doc result
+    is pinned and the token persist released by default; a passed
+    ``scope`` keeps the plan lazy and owns the release.
     """
-    toks = docs.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
-    if cache_tokens:
-        toks = toks.persist()
-        if scope is not None:
-            scope.add(toks)
+    s = CacheScope.of(scope)
+    toks = s.keep(
+        docs.select(
+            F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
+        ).filter(F.col("tok") != "")
+    )
     vocab = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -281,12 +279,7 @@ def vocab_coverage(
             ).alias("oov_rate"),
         )
     )
-    if cache_tokens and scope is None:
-        # leak-free default: pin the per-doc rates, release the
-        # token-sized cache
-        res = res.localCheckpoint(eager=True)
-        toks.unpersist(blocking=True)
-    return res
+    return s.result(res)
 
 
 def tfidf_keywords(
@@ -478,9 +471,7 @@ def _bpe_merge_steps(
         F.explode(F.split(F.col(text_col), " ")).alias("w")
     ).filter(F.col("w") != "")
     wf = toks.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    state = wf.select(_bpe_symbol_str(F.col("w")).alias("wstr"), "freq").localCheckpoint(
-        eager=True
-    )
+    state = wf.select(_bpe_symbol_str(F.col("w")).alias("wstr"), "freq").transform(round_cut)
     bests: list[tuple[str, str, int] | None] = []
     dead = False
     for _step in range(n_merges):
@@ -913,7 +904,7 @@ def rake_phrases(
         # two Column trees the tokenizing regex + posexplode + run window
         # would execute once per reference — materialize the narrow
         # phrase-occurrence table once, inside the caller's job
-        .localCheckpoint(eager=False)
+        .transform(shared)
     )
     word_stats = (
         phrases.select(

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import CacheScope, round_cut, shared
 from ..functions.analysis import doc_fingerprint
 
 
@@ -55,7 +56,7 @@ def positional_word_ngrams(text_col, n: int):
     functions are interpreted (no codegen) and get NO common-subexpression
     elimination inside the lambda, so ``split(text)`` was re-parsed for
     EVERY position — O(words²·len) shingling, a measured order-of-magnitude
-    cliff on page-sized documents (tools/bench_simhash_forms.py).  This
+    cliff on page-sized documents (r6 A/B, recorded in SCALE.md).  This
     form zips the words array with its n-1 shifted copies instead: every
     expression that references the row evaluates once per ROW, and the
     lambda touches only its own argument.  Output is element-for-element
@@ -281,7 +282,7 @@ def minhash_dedup_pairs(
         # pair-sized; checkpointed because the id-set union below expands
         # the candidate chain once per union arm otherwise (measured
         # 1.34 → 1.96 s as plain Column trees)
-        cands = cands.localCheckpoint(eager=False)
+        cands = shared(cands)
         cand_ids = (
             cands.select(F.col("d1").alias("doc_id"))
             .unionByName(cands.select(F.col("d2").alias("doc_id")))
@@ -290,7 +291,7 @@ def minhash_dedup_pairs(
         toksets = toksets.join(cand_ids, "doc_id", "left_semi")
     toksets = toksets.select(
         "doc_id", word_ngrams(F.col(text_col), 3).alias("ws")
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     return (
         cands.join(toksets.withColumnRenamed("doc_id", "d1").withColumnRenamed("ws", "ws1"), "d1")
         .join(toksets.withColumnRenamed("doc_id", "d2").withColumnRenamed("ws", "ws2"), "d2")
@@ -483,7 +484,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     to ~1 row per doc BEFORE the shuffle — shuffle volume is docs × 33
     longs, never tokens.
 
-    Form adjudication, corrected r6 (tools/bench_simhash_forms.py): the r4
+    Form adjudication, corrected r6 (A/B recorded in SCALE.md): the r4
     run of that tool materialized with ``.count()``, which let
     ColumnPruning delete the map-only HOF form entirely — its "0.87 s
     short / 0.81 s long" numbers were parquet row-count timings, and the
@@ -535,7 +536,7 @@ def simhash_dedup_pairs(
     # caller's single action runs it), and band via ONE posexplode over
     # the 4 byte keys (pos IS the band index) so the checkpoint is the
     # only upstream.  Row set identical to the union form.
-    fps = simhash(df, text_col, id_col).localCheckpoint(eager=False)
+    fps = simhash(df, text_col, id_col).transform(shared)
     banded = fps.select(
         "doc_id",
         "simhash",
@@ -666,7 +667,6 @@ def prefix_jaccard_join(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.7,
-    cache_shingles: bool = True,
     scope=None,
 ) -> DataFrame:
     """EXACT all-pairs shingle-Jaccard join with prefix filtering (the
@@ -710,18 +710,15 @@ def prefix_jaccard_join(
     base = ensure_parallelism(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col).alias("doc_id"), grams.alias("ts")
     )
-    if cache_shingles:
-        # base feeds three branches (prefix selection + both verify sides);
-        # without a persist the gram HOF recomputes 3x over the raw text.
-        # MEMORY_AND_DISK: at scale the (id, grams) frame is ~the tokenized
-        # corpus — spilling it still beats three text scans.
-        # Lifetime (cache.py contract): by default the above-threshold
-        # pair result is pinned below and this persist is released before
-        # returning; pass scope=CacheScope() to keep the plan lazy and
-        # release via the scope instead.
-        base = base.persist()
-        if scope is not None:
-            scope.add(base)
+    # base feeds three branches (prefix selection + both verify sides);
+    # without a persist the gram HOF recomputes 3x over the raw text.
+    # MEMORY_AND_DISK: at scale the (id, grams) frame is ~the tokenized
+    # corpus — spilling it still beats three text scans.  Lifetime
+    # (cache.py contract): by default the above-threshold pair result is
+    # pinned and this persist released before returning; pass
+    # scope=CacheScope() to keep the plan lazy and release via the scope.
+    s = CacheScope.of(scope)
+    base = s.keep(base)
     toks = base.select("doc_id", F.size("ts").alias("n"), F.explode("ts").alias("w"))
     dfreq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("dfc"))
     plen = (F.col("n") - F.ceil(F.lit(float(threshold)) * F.col("n")) + 1).cast("int")
@@ -765,12 +762,7 @@ def prefix_jaccard_join(
         .filter(F.col("_jac") >= threshold)
         .select("d1", "d2", F.round(F.col("_jac"), 6).alias("jaccard"))
     )
-    if cache_shingles and scope is None:
-        # leak-free default: pin the (small) above-threshold pair set,
-        # release the corpus-sized shingle base
-        res = res.localCheckpoint(eager=True)
-        base.unpersist(blocking=True)
-    return res
+    return s.result(res)
 
 
 def duplicate_span_stats(
@@ -877,17 +869,6 @@ def containment_pairs(
     )
 
 
-# r14: eager vs lazy per-round checkpoints in dedup_clusters were A/B'd
-# expecting the k-core/label_propagation lazy win — it does NOT transfer:
-# lazy LOSES on llm_keep_canonical (4/4 reps)
-# and llm_leakage_safe_split (3/4) and washes elsewhere, because each
-# round references `labels` three times (two jump-join sides + neighbor
-# leg) and the lazy checkpoint defers materialization into a job that
-# then runs those references against a not-yet-truncated lineage.  Eager
-# stays the default; the flag remains for re-measurement.
-_CLUSTER_CKPT_EAGER = True
-
-
 def dedup_clusters(
     pairs: DataFrame, d1: str = "d1", d2: str = "d2", max_iter: int = 15
 ) -> DataFrame:
@@ -905,11 +886,18 @@ def dedup_clusters(
     joins; near-dup clusters have tiny diameters in practice, so rounds
     stay in single digits.
     """
+    # Eager cuts: lazy per-round checkpoints were A/B'd (r14) expecting the
+    # k_core/label_propagation lazy win, and it does NOT transfer — lazy
+    # LOSES on llm_keep_canonical (4/4 reps) and llm_leakage_safe_split
+    # (3/4) and washes elsewhere, because each round references `labels`
+    # three times (two jump-join sides + neighbor leg) and a lazy
+    # checkpoint defers materialization into a job that then runs those
+    # references against a not-yet-truncated lineage.
     edges = pairs.select(F.col(d1).alias("a"), F.col(d2).alias("b"))
     edges = (
         edges.unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint(eager=_CLUSTER_CKPT_EAGER)
+        .transform(round_cut)
     )
     # Round 1 unrolled (r13): the initial labeling is label == node, so the
     # jump join is the identity and min over neighbors' LABELS is min over
@@ -929,7 +917,7 @@ def dedup_clusters(
                 "label"
             ),
         )
-        .localCheckpoint(eager=_CLUSTER_CKPT_EAGER)
+        .transform(round_cut)
     )
     for it in range(1, max_iter):
         neigh = (
@@ -953,7 +941,7 @@ def dedup_clusters(
                     F.coalesce(F.col("nbr_label"), F.col("label")),
                 ).alias("label"),
             )
-            .localCheckpoint(eager=_CLUSTER_CKPT_EAGER)
+            .transform(round_cut)
         )
         prev = labels
         labels = merged

@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from ..cache import shared
 from .relational import argmax_per_group, ensure_parallelism
 
 # Both scorer implementations are module-level named functions so the
@@ -513,7 +514,7 @@ def fuzzy_best_match_join(
             ub_col="_ub",
         )
         .drop("_ta", "_tb")
-        .localCheckpoint(eager=False)
+        .transform(shared)
     )
     if seed_k == 1:
         # any top-bound candidate is a valid seed (ties included), so the

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import CacheScope, shared
+
 
 def pagerank(
     edges: DataFrame,
@@ -27,7 +29,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     id_col: str = "node_id",
-    cache_edges: bool = True,
     scope=None,
 ) -> DataFrame:
     """Damped PageRank by ``iters`` power iterations over an explicit node
@@ -52,20 +53,17 @@ def pagerank(
     edge list and one (dst, contrib) groupBy — never the node payloads;
     the iteration count is a contract-bounded constant (ranking
     stabilizes in a handful of iterations on bounded-degree similarity
-    graphs).  ``cache_edges`` persists the (src, dst, deg) edge frame so
-    an expensive upstream edge generator (LSH candidate chain) runs once,
-    not once per iteration.  Lifetime (``cache.py`` contract): by default
-    the node-sized rank result is pinned and the edge persist released
-    before returning; pass ``scope=CacheScope()`` to keep the plan lazy
-    and release via the scope.
+    graphs).  The (src, dst, deg) edge frame is persisted so an expensive
+    upstream edge generator (LSH candidate chain) runs once, not once per
+    iteration.  Lifetime (``cache.py`` contract): by default the
+    node-sized rank result is pinned and the edge persist released before
+    returning; pass ``scope=CacheScope()`` to keep the plan lazy and
+    release via the scope.
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    e = e.join(deg, "src")
-    if cache_edges:
-        e = e.persist()
-        if scope is not None:
-            scope.add(e)
+    s = CacheScope.of(scope)
+    e = s.keep(e.join(deg, "src"))
     n_ids = nodes.select(F.col(id_col).alias("node"))
     tot = n_ids.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
     base_ni = F.floor(
@@ -99,11 +97,7 @@ def pagerank(
     res = r.select(
         F.col("node"), F.round(F.col("r_ni").cast("double") / 1e9, 6).alias("rank")
     )
-    if cache_edges and scope is None:
-        # leak-free default: pin the node-sized ranks, release the edges
-        res = res.localCheckpoint(eager=True)
-        e.unpersist(blocking=True)
-    return res
+    return s.result(res)
 
 
 def triangle_count(
@@ -134,17 +128,15 @@ def triangle_count(
     # once per reference.  Lifetime (cache.py contract): the 1-row result
     # is pinned and both persists released by default; a passed scope
     # keeps the plan lazy and owns the release.
-    und = (
+    s = CacheScope.of(scope)
+    und = s.keep(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
             F.greatest(F.col(src), F.col(dst)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
-    if scope is not None:
-        scope.add(und)
     deg = (
         und.select(F.explode(F.array("u", "v")).alias("n"))
         .groupBy("n")
@@ -156,13 +148,13 @@ def triangle_count(
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = d.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).persist()
-    if scope is not None:
-        scope.add(oriented)
+    oriented = s.keep(
+        d.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
+            F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
+        )
+    )
     o1 = oriented.select(F.col("a"), F.col("b").alias("b1"), F.col("db").alias("db1"))
     o2 = oriented.select(F.col("a"), F.col("b").alias("b2"), F.col("db").alias("db2"))
     wedges = o1.join(o2, on="a").filter(
@@ -174,12 +166,7 @@ def triangle_count(
     res = wedges.agg(F.count(F.lit(1)).alias("n_wedges")).crossJoin(
         F.broadcast(tris.agg(F.count(F.lit(1)).alias("n_triangles")))
     )
-    if scope is None:
-        # leak-free default: pin the 1-row result, release both persists
-        res = res.localCheckpoint(eager=True)
-        und.unpersist(blocking=True)
-        oriented.unpersist(blocking=True)
-    return res
+    return s.result(res)
 
 
 def label_propagation(
@@ -217,10 +204,10 @@ def label_propagation(
     # job the caller's action runs, with identical lineage truncation.
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct().transform(shared)
     seed = seeds.select(
         F.col(node_col).alias("n"), F.col(label_col).alias("slab")
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     labels = seed.select("n", F.col("slab").alias("lab"))
     for _ in range(iters):
         votes = (
@@ -237,7 +224,7 @@ def label_propagation(
             winner.join(seed, on="n", how="full_outer")
             .join(labels.select(F.col("n"), F.col("lab").alias("old")), on="n", how="full_outer")
             .select("n", F.coalesce(F.col("slab"), F.col("plab"), F.col("old")).alias("lab"))
-            .localCheckpoint(eager=False)
+            .transform(shared)
         )
     return labels.select(F.col("n").alias(node_col), F.col("lab").alias(label_col))
 
@@ -289,7 +276,7 @@ def k_core(
         # job — one driver job per round instead of two (the
         # label_propagation eager->lazy pattern; measured a wash locally,
         # the removed job submission is a constant driver-latency term)
-        .localCheckpoint(eager=False)
+        .transform(shared)
     )
     n_cur = und.count()
     converged = n_cur == 0
@@ -307,7 +294,7 @@ def k_core(
             und.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
             # lazy + count: one job per round (see the und checkpoint note)
-            .localCheckpoint(eager=False)
+            .transform(shared)
         )
         n_next = nxt.count()
         if n_next == n_cur:

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import CacheScope, shared
 from .relational import ensure_parallelism
 
 
@@ -151,9 +152,7 @@ def mixture_sample(
     # rates), each re-expanding the input chain — one lazy checkpoint
     # keeps the shape at the inherent two passes (counts + rate join);
     # A/B wash-to-win at sf0.1, corpus aggregates 2 -> 1.
-    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_s")).localCheckpoint(
-        eager=False
-    )
+    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_s")).transform(shared)
     tot = counts.agg(
         F.sum("n_s").cast("double").alias("n_total"),
         F.sum(F.sqrt(F.col("n_s").cast("double"))).alias("z"),
@@ -315,7 +314,7 @@ def kn_perplexity_scores(
     tbc = (
         bg.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("nb"))
-        .localCheckpoint(eager=False)
+        .transform(shared)
     )
     tb = tbc.withColumn("nu", F.sum("nb").over(Window.partitionBy("w1")))
     tb = tb.withColumn("n1p", F.count(F.lit(1)).over(Window.partitionBy("w1")))
@@ -352,7 +351,6 @@ def dsir_resample(
     id_col: str = "doc_id",
     buckets: int = 256,
     k: int = 50,
-    cache_features: bool = True,
     scope=None,
     target_flag=None,
 ) -> DataFrame:
@@ -419,16 +417,14 @@ def dsir_resample(
     else:
         tgt_counts = feats(target).groupBy("b").agg(F.count(F.lit(1)).alias("np"))
         raw_feats = feats(raw)
-    if cache_features:
-        # raw_feats feeds BOTH the q-distribution aggregate and the
-        # per-doc bucket counts; uncached, the expensive featurization
-        # (interpreted bigram HOF + one md5 per token over the whole raw
-        # corpus) executes twice.  Lifetime (cache.py contract): the
-        # k-row result is pinned and this released by default; a passed
-        # scope keeps the plan lazy and owns the release.
-        raw_feats = raw_feats.persist()
-        if scope is not None:
-            scope.add(raw_feats)
+    # raw_feats feeds BOTH the q-distribution aggregate and the per-doc
+    # bucket counts; uncached, the expensive featurization (interpreted
+    # bigram HOF + one md5 per token over the whole raw corpus) executes
+    # twice.  Lifetime (cache.py contract): the k-row result is pinned and
+    # this released by default; a passed scope keeps the plan lazy and
+    # owns the release.
+    s = CacheScope.of(scope)
+    raw_feats = s.keep(raw_feats)
     if tgt_counts is None:
         tgt_counts = (
             raw_feats.filter(F.col("_tgt"))
@@ -488,11 +484,7 @@ def dsir_resample(
             F.round(F.col("score_ni").cast("double") / 1e9, 6).alias("score"),
         )
     )
-    if cache_features and scope is None:
-        # leak-free default: pin the k-row pick, release the feature cache
-        res = res.localCheckpoint(eager=True)
-        raw_feats.unpersist(blocking=True)
-    return res
+    return s.result(res)
 
 
 def c4_rule_filter(
@@ -560,13 +552,15 @@ def token_budget_plan(
     aggregate (G rows, G = number of sources), one broadcast of the 1-row
     total — corpus text never shuffles.
     """
+    # counts feeds both the output rows and the normalizer aggregate; as
+    # two Column trees the full corpus token count executes twice (one
+    # FileScan per subtree observed).  One row per source: a shared
+    # intermediate, whose blocks only this plan reads.  Not a persist: that
+    # stays registered in the CacheManager after the call, and every later
+    # query's plan would read these counts, stale once documents change.
     counts = df.groupBy(group_col).agg(
         F.sum(F.size(F.split(F.col(text_col), " "))).cast("long").alias("n_tokens")
-    ).persist()
-    # ^ counts feeds both the output rows and the normalizer aggregate;
-    # uncached, the full corpus token count executes twice (one FileScan
-    # per subtree observed).  The cached frame is one row per source —
-    # negligible footprint, so no opt-out flag.
+    ).transform(shared)
     # sqrt quantized to integer nano-units so the cross-source normalizer
     # is an exact long sum (a double SUM is summation-order-dependent
     # across engines — same trick as sq_reconstruction_error)
@@ -906,7 +900,7 @@ def kl_divergence_by_group(
         tokens.select(F.col(group_col).alias("_g"), b)
         .groupBy("_g", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("c_gb"))
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     g_tot = gb.groupBy("_g").agg(F.sum("c_gb").cast("long").alias("n_g"))
     corpus = gb.groupBy("b").agg(F.sum("c_gb").cast("long").alias("c_b"))
     c_tot = corpus.agg(F.sum("c_b").cast("long").alias("n_c"))
@@ -1513,7 +1507,7 @@ def t_closeness_report(
     # bit-identical by sum-of-counts associativity).
     class_val = cv.groupBy(*qi_cols, "_v").agg(
         F.count(F.lit(1)).cast("long").alias("_ncv")
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     glob = class_val.groupBy("_v").agg(F.sum("_ncv").cast("long").alias("_ngv"))
     n_total = class_val.agg(F.sum("_ncv").cast("long").alias("_n"))
     w_class = Window.partitionBy(*qi_cols)

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import shared
 from ..functions.hashing import deterministic_split_flag, md5_hex
 
 
@@ -362,7 +363,7 @@ def cooccurrence_lift(
         # (entity, item) frame is bounded by entities x item vocabulary —
         # far below the event count — so materialize it once (lazily;
         # integer counts downstream, no rounding-order concern).
-        .localCheckpoint(eager=False)
+        .transform(shared)
     )
     totals = u.agg(F.countDistinct("_e").cast("long").alias("_n_entities"))
     per_item = u.groupBy("_i").agg(F.count(F.lit(1)).cast("long").alias("_n"))

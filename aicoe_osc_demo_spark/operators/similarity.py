@@ -36,6 +36,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import CacheScope, keep_in, shared
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -368,9 +370,7 @@ def _self_join_scored(
     # the bucketed pass the first time either side needs it and the
     # second side reads the checkpointed blocks — one UDF scan instead of
     # two, computed inside the job (nothing crosses runs).
-    tb = _explode_tables(base, F.col("v"), n_tables, planes_per_table, dim).localCheckpoint(
-        eager=False
-    )
+    tb = _explode_tables(base, F.col("v"), n_tables, planes_per_table, dim).transform(shared)
     right = tb.select(
         F.col("vid").alias("d2"), F.col("v").alias("v2"), F.col("nrm").alias("n2"), "t", "bucket"
     )
@@ -600,13 +600,6 @@ _LLOYD_NPROBE = 4
 # static dim; the narrow-subspace form engages only under this cap.
 _CENT_UNROLL_MAX_DIM = 16
 
-# r14: checkpoint the quantized input once in ROUTED Lloyd mode (iters+1
-# sequential driver jobs otherwise each rescan + requantize + respread it).
-# Module-level so the A/B harness can flip it; semantics are unaffected
-# (same rows, same partitioning).
-_LLOYD_CKPT_ROUTED_INPUT = True
-
-
 def _exact_cent_dist():
     """Exact rational distance ||x - s/n||^2 = num/n^2 with
     num = sum_i (n*x_i - s_i)^2: num and n^2 are exact longs well inside
@@ -782,15 +775,11 @@ def _lloyd_quantized(
     # rep at sf0.1: the rescan is ~30 ms and the block round-trips are pure
     # overhead), so it engages only above the gate — scale-adaptive, no
     # constants.  The flat path stays lazy: it is a single driver job where
-    # ReusedExchange already deduplicates q (r6 note below).
-    input_parts = q.rdd.getNumPartitions()
-    q = ensure_parallelism(q)
-    if (
-        k >= route_min_k
-        and _LLOYD_CKPT_ROUTED_INPUT
-        and input_parts >= q.sparkSession.sparkContext.defaultParallelism
-    ):
-        q = q.localCheckpoint(eager=False)
+    # ReusedExchange already deduplicates q (r6 note below).  The gate is
+    # ensure_parallelism's own width probe: it returns its input unchanged
+    # exactly when the input is already that wide.
+    spread = ensure_parallelism(q)
+    q = shared(q) if k >= route_min_k and spread is q else spread
     cents = (
         q.orderBy("vec_id")
         .limit(k)
@@ -897,7 +886,6 @@ def product_quantize(
     id_col: str = "vec_id",
     dim: int = 64,
     scale: int = 1000,
-    cache_artifacts: bool = False,
     scope=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Product quantization (the FAISS IVF-PQ memory layout, Jégou et al.
@@ -919,15 +907,12 @@ def product_quantize(
     vec_id (m is 4-16 — at scale fuse via one pass if m*iters jobs
     matter).  Codebooks are m*k rows — always broadcastable.
 
-    ``cache_artifacts`` persists both outputs: any consumer that feeds
-    the codes AND the codebooks into one action (ADC's LUT + codes scan,
-    refine's shortlist stage) otherwise re-executes the Lloyd chain once
-    per branch — the cross-branch re-run ``ivfpq_topk(cache_index=True)``
-    fixes for its own chain.  This function returns LAZY frames, so it
-    cannot release the persists itself: pass ``scope=CacheScope()`` to
-    register them for the caller to ``release()``, or release/materialize
-    in the consuming operator (the ``cache.py`` contract every built-in
-    consumer follows).
+    A passed ``scope`` persists both outputs into it: any consumer that
+    feeds the codes AND the codebooks into one action (ADC's LUT + codes
+    scan, refine's shortlist stage) otherwise re-executes the Lloyd chain
+    once per branch.  This function returns LAZY frames, so it cannot
+    release the persists itself; the scope's owner does (the ``cache.py``
+    contract).  Without a scope both outputs stay lazy.
     """
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -1033,13 +1018,7 @@ def product_quantize(
         )
     )
     books = cents_used.select("sub", "cid", "s", "n")
-    if cache_artifacts:
-        out = out.persist()
-        books = books.persist()
-        if scope is not None:
-            scope.add(out)
-            scope.add(books)
-    return out, books
+    return keep_in(scope, out, books)
 
 
 def pq_adc_topk(
@@ -1100,6 +1079,7 @@ def pq_adc_topk(
     qsub = queries.select(
         F.col(id_col).alias("query_id"), F.explode(qslices).alias("e")
     ).select("query_id", F.col("e.sub").alias("sub"), F.col("e.qv").alias("qv"))
+    s = CacheScope.of(scope)
     if not cache_lut:
         # Serving path (persisted-index reads, plan otherwise fully lazy):
         # the LUT is referenced m+1 times below and WITHOUT the persist its
@@ -1108,7 +1088,7 @@ def pq_adc_topk(
         # checkpoint leaves the visible plan as the broadcast codebook
         # joins + the codes scan (index-table scans stay inspectable,
         # which the persist/serve test pins).
-        qsub = qsub.localCheckpoint(eager=False)
+        qsub = shared(qsub)
     num = F.aggregate(
         F.zip_with("qv", "s", lambda x, s: (F.col("n") * x - s) * (F.col("n") * x - s)),
         F.lit(0).cast("long"),
@@ -1126,11 +1106,10 @@ def pq_adc_topk(
     # Lifetime: cache.py contract — released below unless a scope owns it.
     # cache_lut=False (the persisted-index serving paths) skips the persist
     # entirely: there the codebooks are a materialized parquet table, the
-    # LUT lineage is a broadcast-sized re-read, and the plan stays LAZY.
+    # LUT lineage is a broadcast-sized re-read, and the plan stays LAZY
+    # (a scope holding nothing returns its result unpinned).
     if cache_lut:
-        lut = lut.persist()
-        if scope is not None:
-            scope.add(lut)
+        lut = s.keep(lut)
     # fan the corpus codes out per query (unless the caller already joined
     # a candidate (vec_id, codes, query_id) set, e.g. ivfpq_topk's probe
     # restriction), then resolve each subspace code against the broadcast
@@ -1163,11 +1142,7 @@ def pq_adc_topk(
     res = top_k_per_group(
         scored, ["query_id"], -F.col("adc_dist"), k, tiebreak=["neighbor_id"]
     )
-    if cache_lut and scope is None:
-        # leak-free default: pin the |queries|*k result, release the LUT
-        res = res.localCheckpoint(eager=True)
-        lut.unpersist(blocking=True)
-    return res
+    return s.result(res)
 
 
 def ivfpq_topk(
@@ -1184,7 +1159,6 @@ def ivfpq_topk(
     query_id_col: str = "query_id",
     dim: int = 64,
     scale: int = 1000,
-    cache_index: bool = True,
     scope=None,
 ) -> DataFrame:
     """The complete IVF-PQ search path (FAISS's billion-vector default,
@@ -1193,8 +1167,8 @@ def ivfpq_topk(
     inverted lists), product-quantization codes shrink WHAT is scanned
     (ADC — m codes per vector, no vector arithmetic per row).
 
-    ``cache_index`` persists the four training artifacts (assignments,
-    coarse centroids, codes, codebooks) so the two Lloyd chains run ONCE
+    The four training artifacts (assignments, coarse centroids, codes,
+    codebooks) are persisted so the two Lloyd chains run ONCE
     even though each feeds two consumers (assignments → lists AND probe
     ranking; PQ loop → codes AND the ADC LUT) — measured 2x at sf0.1
     (warm 5.8 s → 2.9 s; ReusedExchange alone does not cover the
@@ -1228,20 +1202,13 @@ def ivfpq_topk(
             "v"
         ),
     )
+    s = CacheScope.of(scope)
     assigned, coarse = _lloyd_quantized(qz, nlist, iters, dim=dim)
+    assigned, coarse = s.keep(assigned), s.keep(coarse)
     codes, books = product_quantize(
-        corpus, m=m, k=k_pq, iters=iters, vec_col=vec_col, id_col=id_col, dim=dim, scale=scale
+        corpus, m=m, k=k_pq, iters=iters, vec_col=vec_col, id_col=id_col, dim=dim,
+        scale=scale, scope=s,
     )
-    artifacts = []
-    if cache_index:
-        assigned = assigned.persist()
-        coarse = coarse.persist()
-        codes = codes.persist()
-        books = books.persist()
-        artifacts = [assigned, coarse, codes, books]
-        if scope is not None:
-            for a in artifacts:
-                scope.add(a)
     lists = assigned.select("vec_id", F.col("cid").alias("list_id"))
 
     # probe selection: rank the nlist coarse centroids per query by the same
@@ -1282,15 +1249,9 @@ def ivfpq_topk(
         dim=dim,
         scale=scale,
         _prejoined=True,
-        scope=scope,
+        scope=s,
     )
-    if artifacts and scope is None:
-        # leak-free default: pq_adc_topk already materialized the tiny
-        # |queries|*k result, so the four index artifacts can be freed
-        # before the caller ever runs an action
-        for a in artifacts:
-            a.unpersist(blocking=True)
-    return adc
+    return s.result(adc)
 
 
 def pq_refine_topk(
@@ -1325,14 +1286,12 @@ def pq_refine_topk(
     the corpus scan, so the big table is read, never shuffled.  Exact
     vector arithmetic runs on shortlist*|queries| rows, not the corpus.
     """
-    from ..cache import CacheScope
     from .relational import top_k_per_group
 
-    own = scope is None
-    scope = scope if scope is not None else CacheScope()
+    s = CacheScope.of(scope)
     codes, books = product_quantize(
         corpus, m=m, k=k_pq, iters=iters, vec_col=vec_col, id_col=id_col, dim=dim,
-        scale=scale, cache_artifacts=True, scope=scope,
+        scale=scale, scope=s,
     )
     q = queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     short = pq_adc_topk(
@@ -1345,7 +1304,7 @@ def pq_refine_topk(
         id_col="query_id",
         dim=dim,
         scale=scale,
-        scope=scope,
+        scope=s,
     ).filter(F.col("neighbor_id") != F.col("query_id"))
     cand = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
@@ -1360,12 +1319,7 @@ def pq_refine_topk(
     res = top_k_per_group(
         scored, ["query_id"], F.col("cosine"), top_k, tiebreak=["neighbor_id"]
     )
-    if own:
-        # leak-free default (cache.py contract): pin the |queries|*top_k
-        # result, then release the PQ artifacts and the ADC LUT
-        res = res.localCheckpoint(eager=True)
-        scope.release()
-    return res
+    return s.result(res)
 
 
 def scalar_quantize(
@@ -1477,7 +1431,6 @@ def semdedup_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: int = 1000,
-    cache_assignments: bool = True,
     scope=None,
     dim: int | None = None,
 ) -> DataFrame:
@@ -1521,17 +1474,15 @@ def semdedup_pairs(
         .join(assigned, "vec_id")
         .withColumn("nrm", _norm(F.col("v")))
     )
-    if cache_assignments:
-        # the frame feeds BOTH sides of the self-join, and Spark does not
-        # reuse the iterative Lloyd exchanges across the two subtrees (0
-        # ReusedExchange observed) — without the persist the k-means chain
-        # and its corpus scans run twice (measured 6.7 s -> 3.0 s at
-        # sf0.1).  One row per vector, so the cached footprint is the
-        # corpus itself.  Lifetime (cache.py contract): released below
-        # by default; a passed scope keeps the plan lazy and owns it.
-        vecs = vecs.persist()
-        if scope is not None:
-            scope.add(vecs)
+    # the frame feeds BOTH sides of the self-join, and Spark does not
+    # reuse the iterative Lloyd exchanges across the two subtrees (0
+    # ReusedExchange observed) — without the persist the k-means chain and
+    # its corpus scans run twice (measured 6.7 s -> 3.0 s at sf0.1).  One
+    # row per vector, so the cached footprint is the corpus itself.
+    # Lifetime (cache.py contract): released below by default; a passed
+    # scope keeps the plan lazy and owns it.
+    s = CacheScope.of(scope)
+    vecs = s.keep(vecs)
     a, b = vecs.alias("a"), vecs.alias("b")
     cos = _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
     pairs = (
@@ -1552,12 +1503,7 @@ def semdedup_pairs(
         F.min("keep").alias("keep_id"),
         F.round(F.max("cos"), 6).alias("max_cos"),
     )
-    if cache_assignments and scope is None:
-        # leak-free default: pin the dropped-doc result, release the
-        # corpus-sized assignment cache
-        res = res.localCheckpoint(eager=True)
-        vecs.unpersist(blocking=True)
-    return res
+    return s.result(res)
 
 
 def _spark_round6(x: float) -> float:
@@ -1638,8 +1584,6 @@ def mmr_diverse_topk(
     pool: int = 20,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cache_pool: bool = True,
-    cache_picks: bool = True,
     scope=None,
     driver_greedy: bool = True,
 ) -> DataFrame:
@@ -1668,11 +1612,7 @@ def mmr_diverse_topk(
     if you need large k.  Lifetime (``cache.py`` contract): by default
     the k-row result is pinned and the pool + pick persists released
     before returning; a passed ``scope`` keeps the plan lazy and owns
-    the release.  The two flags are separate on purpose: ``cache_pool``
-    governs only the pool frame's cache lifetime, while ``cache_picks``
-    memoizes each step's 1-row pick — disabling the PICK memoization
-    reinstates the ~2^(k-i) re-execution of every pick, so keep
-    ``cache_picks=True`` unless k is tiny.
+    the release.
 
     ``driver_greedy=True`` (default) keeps the pool build distributed
     (one corpus scan + top-``pool`` by relevance) but runs the
@@ -1684,8 +1624,8 @@ def mmr_diverse_topk(
     chain exactly: left-to-right fold for dot/norm (``F.aggregate``
     order), IEEE-754 double ops, and Spark's HALF_UP shortest-repr
     rounding, so both paths are bit-identical (test-pinned).
-    ``driver_greedy=False`` keeps the all-Spark lazy plan (the cache
-    flags and ``scope`` apply only there).
+    ``driver_greedy=False`` keeps the all-Spark lazy plan (``scope``
+    applies only there).
     """
     q = query.select(F.col(vec_col).alias("qv"))
     rel = _dot(F.col("v"), F.col("qv")) / (_norm(F.col("v")) * _norm(F.col("qv")))
@@ -1698,12 +1638,8 @@ def mmr_diverse_topk(
     )
     if driver_greedy:
         return _mmr_greedy_driver(corpus, cand, k, lam, id_col)
-    pinned = []
-    if cache_pool:
-        cand = cand.persist()
-        pinned.append(cand)
-        if scope is not None:
-            scope.add(cand)
+    s = CacheScope.of(scope)
+    cand = s.keep(cand)
 
     picks: list[DataFrame] = []
     selected = None
@@ -1732,15 +1668,10 @@ def mmr_diverse_topk(
                     ).alias("score"),
                 )
             )
-        pick = scored.orderBy(F.desc("score"), "cand_id").limit(1)
-        if cache_picks:
-            # each pick feeds every later step's anti-join AND broadcast
-            # max-sim AND the final union — uncached, pick i re-executes in
-            # ~2^(k-i) subtrees (measured k=5: 6.3 s -> 2.6 s at sf0.1)
-            pick = pick.persist()
-            pinned.append(pick)
-            if scope is not None:
-                scope.add(pick)
+        # each pick feeds every later step's anti-join AND broadcast
+        # max-sim AND the final union — uncached, pick i re-executes in
+        # ~2^(k-i) subtrees (measured k=5: 6.3 s -> 2.6 s at sf0.1)
+        pick = s.keep(scored.orderBy(F.desc("score"), "cand_id").limit(1))
         picks.append(pick.select(F.lit(step).alias("step"), "cand_id", "v", "score"))
         selected = picks[0].select("cand_id", "v") if step == 1 else selected.unionByName(
             picks[-1].select("cand_id", "v")
@@ -1752,12 +1683,7 @@ def mmr_diverse_topk(
     res = out.select(
         "step", F.col("cand_id").alias("vec_id"), F.round("score", 6).alias("score")
     )
-    if pinned and scope is None:
-        # leak-free default: pin the k-row result, release pool + picks
-        res = res.localCheckpoint(eager=True)
-        for df in pinned:
-            df.unpersist(blocking=True)
-    return res
+    return s.result(res)
 
 
 def knn_graph(
@@ -2072,12 +1998,10 @@ def write_pq_index(
         raise ValueError(
             "write_pq_index: cannot train PQ codebooks from an empty corpus"
         )
-    from ..cache import CacheScope
-
     with CacheScope() as s:
         codes, books = product_quantize(
             corpus, m=m, k=k, iters=iters, vec_col=vec_col, id_col=id_col, dim=dim,
-            scale=scale, cache_artifacts=True, scope=s,
+            scale=scale, scope=s,
         )
         codes.write.mode(mode).parquet(f"{path}/codes")
         books.write.mode(mode).parquet(f"{path}/codebooks")
@@ -2197,13 +2121,11 @@ def write_ivfpq_index(
             "v"
         ),
     )
-    from ..cache import CacheScope
-
     assigned, coarse = _lloyd_quantized(qz, nlist, iters, dim=dim)
     with CacheScope() as s:
         codes, books = product_quantize(
             corpus, m=m, k=k_pq, iters=iters, vec_col=vec_col, id_col=id_col, dim=dim,
-            scale=scale, cache_artifacts=True, scope=s,
+            scale=scale, scope=s,
         )
         (
             codes.join(

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..cache import shared
+
 _MG_SCHEMA = StructType(
     [StructField("item", StringType()), StructField("mg_count", LongType())]
 )
@@ -441,7 +443,7 @@ def hll_overlap_pairs(
     # the initial plan, exchange reuse not guaranteed).  The sketch is
     # G × m rows of bounded state: lazily checkpoint it so the raw items
     # are touched exactly once, as the contract above promises.
-    sk = hll_sketch(items, item_col, [group_col]).localCheckpoint(eager=False)
+    sk = hll_sketch(items, item_col, [group_col]).transform(shared)
     est = hll_estimate(sk, [group_col]).select(
         F.col(group_col).alias("_g"), F.col("estimate").alias("_est")
     )

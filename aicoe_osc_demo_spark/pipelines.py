@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import shared
 from .functions.schema import snakify_columns
 from .functions.text import (
     clean_paragraph,
@@ -112,7 +113,7 @@ def text_curation_pipeline(
     # is annotation-scale (bounded) — materialize once, lazily (r13).
     positives = with_q.select(
         "source_file", F.col("source_page").alias("page"), "question", "context"
-    ).withColumn("label", F.lit(1)).localCheckpoint(eager=False)
+    ).withColumn("label", F.lit(1)).transform(shared)
 
     # negative pool: extracted paragraphs not on any positive (pdf, page) — J8
     pos_pages = positives.select(

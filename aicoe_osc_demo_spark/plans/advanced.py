@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import shared
 from ..operators.multimodal import extract_features, media_from_text, media_metadata
 from . import load, register
 
@@ -418,9 +419,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and both media arms execute twice.  The (media_id, phash) frame is
     # two longs per media row: checkpoint it once (lazily).  Measured at
     # sf0.1: wins every interleaved rep; Python hash passes 2 -> 1.
-    hashes = perceptual_hashes(media.unionByName(clones)).localCheckpoint(
-        eager=False
-    )
+    hashes = perceptual_hashes(media.unionByName(clones)).transform(shared)
     return phash_near_dup_pairs(hashes, max_hamming=5, bands=6, band_bits=10)
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import shared
 from ..operators.corpus import bm25_topk, chunk_documents, pack_offset_bins
 from . import QUERIES, load, register
 
@@ -180,7 +181,7 @@ def llm_retrieve_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = d.filter(F.col("doc_id") < 5).select(
         F.col("doc_id").alias("q_id"),
         F.array_join(F.slice(F.split(F.col("text"), " "), 1, 3), " ").alias("q_text"),
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     cands = bm25_topk(d, queries, k=10, k1=1.5, b=0.75).select(
         "q_id", "doc_id", F.round("score", 6).alias("bm25_score")
     )
@@ -535,7 +536,7 @@ def llm_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = d.filter(F.col("doc_id") < 5).select(
         F.col("doc_id").alias("q_id"),
         F.array_join(F.slice(F.split(F.col("text"), " "), 1, 3), " ").alias("q_text"),
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     # r14 (the r13 round-close flag): BOTH rankers score the SAME
     # query-term-restricted postings — the bm25 leg through idf/length
     # normalization, the tf leg as a plain tf sum.  Materialize the bounded
@@ -548,7 +549,7 @@ def llm_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (qterms, the distinct term set, and each leg's derivation), each
     # re-expanding the documents slice scan.
     qt = bm25_query_terms(queries)
-    matched = bm25_matched_postings(d, qt).localCheckpoint(eager=False)
+    matched = bm25_matched_postings(d, qt).transform(shared)
     stats = d.select(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg(F.size(F.split(F.col("text"), " "))).alias("avgdl"),
@@ -835,12 +836,12 @@ def llm_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = (
         bi.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
-        .localCheckpoint(eager=False)
+        .transform(shared)
     )
     uni = (
         toks.groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(shared)
     )
     tot = bc.agg(F.sum("n_ab").cast("long").alias("nt"))
     return (
@@ -1074,7 +1075,7 @@ def llm_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     tcounts = (
         toks.groupBy("lang", "bucket", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(shared)
     )
     tok_per_bucket = tcounts.groupBy("lang", "bucket").agg(
         F.sum("c").cast("long").alias("n_tok")
@@ -1212,7 +1213,7 @@ def llm_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to one per n-gram order (same move as the KN model table).
     uni = toks.groupBy("lang", "w").agg(
         F.count(F.lit(1)).cast("long").alias("n")
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     ut = uni.groupBy("lang").agg(F.sum("n").cast("long").alias("nt"))
     p_u = F.col("n").cast("double") / F.col("nt")
     h_uni = (
@@ -1228,7 +1229,7 @@ def llm_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bc = bi.groupBy("lang", "w1", "w2").agg(
         F.count(F.lit(1)).cast("long").alias("n_ab")
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     m1 = bc.groupBy("lang", "w1").agg(F.sum("n_ab").cast("long").alias("n1"))
     bt = bc.groupBy("lang").agg(F.sum("n_ab").cast("long").alias("bnt"))
     h_bi = (
@@ -1448,10 +1449,10 @@ def llm_bleu_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same-box interleaved A/B wins 4/5 paired reps (values identical).
     cand = d.filter(F.col("doc_id") < 25).select(
         F.col("doc_id").alias("qid"), toks.alias("toks")
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     ref = d.filter((F.col("doc_id") >= 25) & (F.col("doc_id") < 50)).select(
         (F.col("doc_id") - 25).alias("qid"), toks.alias("toks")
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
 
     def grams(df, n):
         if n == 1:

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import shared
 from ..streaming.incremental import sessionize, windowed_event_counts
 from . import load, register
 
@@ -3332,7 +3333,7 @@ def events_markov_2step(spark: SparkSession, sf_dir: str) -> DataFrame:
         "state",
         "next_state",
         (F.col("n").cast("double") / F.col("n_from")).alias("pr"),
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     a = edges.select(
         F.col("state"), F.col("next_state").alias("_mid"), F.col("pr").alias("_pa")
     )

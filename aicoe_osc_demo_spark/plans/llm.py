@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import shared
 from ..operators.dedup import (
     exact_dedup,
     lsh_candidate_pairs,
@@ -1867,7 +1868,7 @@ def llm_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leg, re-expanding its pushdown corpus scan per reference (4
     # embeddings scans total); one lazy checkpoint cuts it to 3 (A/B
     # wash-to-win: 3/5 paired reps, values identical).
-    queries = emb.filter(F.col("vec_id") < 5).localCheckpoint(eager=False)
+    queries = emb.filter(F.col("vec_id") < 5).transform(shared)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
@@ -1929,7 +1930,7 @@ def llm_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     # r14: same two-leg query-slice shape as llm_ndcg_eval — one lazy
     # checkpoint on the 5-row slice (embeddings scans 4 -> 3)
-    queries = emb.filter(F.col("vec_id") < 5).localCheckpoint(eager=False)
+    queries = emb.filter(F.col("vec_id") < 5).transform(shared)
     lsh = lsh_ann_topk(
         emb, queries, k=5, n_tables=_ANN_TABLES, planes_per_table=_ANN_PLANES, dim=64
     ).select("query_id", "neighbor_id", F.lit(True).alias("hit"))

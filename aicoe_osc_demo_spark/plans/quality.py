@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import shared
 from ..functions.analysis import (
     EMAIL_RE,
     IPV4_RE,
@@ -508,7 +509,7 @@ def llm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scores is doc-sized and 3 columns wide — materialize it once
     # (lazily; the caller's action runs it).  Measured at sf0.1: wins
     # every interleaved rep; corpus passes 2 -> 1.
-    scores = scores.localCheckpoint(eager=False)
+    scores = shared(scores)
     binned = percentile_bins(scores, ["lang"], "avg_logp", 3)
     bucket = (
         F.when(F.col("bin") == 2, F.lit("head"))
@@ -627,7 +628,7 @@ def pipeline_llm_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(lang_id(F.col("text")) == "en")
         .withColumn("q", F.round(quality_score(F.col("text")), 6))
         .filter(F.col("q") >= 0.6)
-    ).localCheckpoint(eager=False)
+    ).transform(shared)
     rep = repetition_stats(gated.select("doc_id", "text"))
     gated = gated.join(rep.select("doc_id", "top_ngram_frac"), on="doc_id").filter(
         F.col("top_ngram_frac") <= 0.3
@@ -639,9 +640,7 @@ def pipeline_llm_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = (
         gated.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1).drop("rk")
     )
-    deduped = deduped.select("doc_id", "source", "q", "fingerprint").localCheckpoint(
-        eager=False
-    )
+    deduped = deduped.select("doc_id", "source", "q", "fingerprint").transform(shared)
     sampled = mixture_sample(deduped, "source").filter(F.col("kept"))
     return sampled.select("doc_id", "source", "q", "fingerprint")
 
@@ -1680,7 +1679,7 @@ def quality_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # visible on this 0.4 s entry); a multi-file corpus engages, the
     # single-file bench input keeps the r13 shape byte-identical
     if len(d.inputFiles()) >= spark.sparkContext.defaultParallelism:
-        obs = obs.localCheckpoint(eager=False)
+        obs = shared(obs)
     rt = obs.groupBy("source").agg(F.sum("o").cast("long").alias("r_tot"))
     ct = obs.groupBy("lang").agg(F.sum("o").cast("long").alias("c_tot"))
     n = obs.agg(F.sum("o").cast("long").alias("n"))
@@ -1877,7 +1876,7 @@ def quality_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # n count, the tie correction); each re-expanded the events scan
         # + aggregate.  The table is (event_type x day)-bounded:
         # materialize once (lazily), events passes 4 -> 1.
-        .localCheckpoint(eager=False)
+        .transform(shared)
     )
     a = daily.select("event_type", F.col("d").alias("_da"), F.col("y").alias("_ya"))
     b = daily.select("event_type", F.col("d").alias("_db"), F.col("y").alias("_yb"))

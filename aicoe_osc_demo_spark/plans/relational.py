@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import shared
 from ..functions.hashing import deterministic_split_flag, md5_hex
 from ..operators.relational import dedup_keep_first, melt, top_k_per_group
 from . import load, register
@@ -1613,7 +1614,7 @@ def agg_share_to_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize it once (lazily).  A region WINDOW instead would
         # also work but changes the double-sum ORDER of _rrev and risks
         # the 6dp round; the checkpoint keeps the aggregate bit-identical.
-        .localCheckpoint(eager=False)
+        .transform(shared)
     )
     rrev = nrev.groupBy("region").agg(F.sum("_nrev").alias("_rrev"))
     return nrev.join(F.broadcast(rrev), "region").select(

@@ -749,7 +749,7 @@ def test_mmr_trades_relevance_for_diversity(spark):
     ]
     corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
     query = spark.createDataFrame([(0, q)], ["vec_id", "embedding"])
-    out = mmr_diverse_topk(corpus, query, k=3, lam=0.5, pool=4, cache_pool=False)
+    out = mmr_diverse_topk(corpus, query, k=3, lam=0.5, pool=4)
     picks = {r.step: r.vec_id for r in out.collect()}
     assert picks[1] == 1          # highest relevance first
     assert picks[2] == 4          # diversity beats the redundant clones
@@ -826,7 +826,7 @@ def test_pagerank_star_graph_matches_python_mirror(spark):
     nodes = list(range(6))
     e_df = spark.createDataFrame(edges, ["src", "dst"])
     n_df = spark.createDataFrame([(i,) for i in nodes], ["node_id"])
-    out = {r.node: r.rank for r in pagerank(e_df, n_df, iters=3, cache_edges=False).collect()}
+    out = {r.node: r.rank for r in pagerank(e_df, n_df, iters=3).collect()}
 
     # python mirror with identical integer nano-unit arithmetic
     N = 6

@@ -186,14 +186,28 @@ def test_c4_rules_is_shuffle_free(spark):
 
 
 def test_token_budget_plan_scans_corpus_once(spark):
-    # the per-source counts are cached and reused by the normalizer
-    # aggregate — the corpus parquet must be scanned exactly once
+    # the per-source counts are a shared (checkpointed) intermediate that
+    # the normalizer aggregate reuses — the corpus parquet is read once,
+    # inside the checkpoint, never by a live scan of either branch
     plan = explain(QUERIES["llm_token_budget_plan"](spark, SF_DIR), "simple")
     # both the output projection and the normalizer aggregate read the
-    # cached per-source counts (the FileScan string inside the
-    # InMemoryRelation description is the cached plan, not a live scan)
-    assert plan.count("InMemoryTableScan") == 2
+    # checkpointed per-source counts
+    assert plan.count("Scan ExistingRDD") == 2
+    assert "FileScan" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_token_budget_plan_leaves_no_cached_result(spark):
+    # no result reuse across queries: the per-source counts must not stay
+    # registered in the CacheManager, where a later call's plan (or one
+    # over changed documents) would read them
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    first = QUERIES["llm_token_budget_plan"](spark, SF_DIR).collect()
+    second = QUERIES["llm_token_budget_plan"](spark, SF_DIR)
+    assert "InMemory" not in explain(second, "simple")
+    assert sorted(second.collect()) == sorted(first)
+    assert cache.isEmpty()
 
 
 def test_entire_catalog_has_no_cartesian_product(spark):
@@ -237,7 +251,7 @@ def test_unpartitioned_windows_and_single_part_exchanges_are_post_reduction(spar
         "Limit",            # Local/Global/CollectLimitExec
         "TakeOrderedAndProject",  # fused ORDER BY + LIMIT (k-row output)
         "LocalTableScan",   # literal frames (math tables, manifests)
-        "InMemoryTableScan",  # cached reduced artifacts (token budgets)
+        "InMemoryTableScan",  # cached reduced artifacts
         "ReusedExchange",   # alias of an exchange already checked
         "ScanExistingRDD",  # localCheckpoint'ed iterative state (peeling)
         "RDDScan",

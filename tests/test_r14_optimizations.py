@@ -123,12 +123,14 @@ def test_rank_fusion_tf_leg_sum_tf_equals_occurrence_count(spark):
 
 
 def test_lloyd_routed_input_checkpoint_gate_parity(spark):
-    """r14: routed mode checkpoints the quantized input ONLY when the input
-    arrives with >= defaultParallelism partitions (the ensure_parallelism
-    gate).  Above the gate the checkpointed run must produce bit-identical
-    assignments; below it the plan must not checkpoint (bench path
-    unchanged)."""
-    import aicoe_osc_demo_spark.operators.similarity as sim
+    """Routed Lloyd checkpoints the quantized input ONLY when the input
+    arrives with >= defaultParallelism partitions (ensure_parallelism
+    returns it unchanged).  On a wide input the plan reads the
+    checkpointed (vec_id, v) scan; on a narrow one it does not; the
+    assignments are identical."""
+    import re
+
+    from aicoe_osc_demo_spark.operators.similarity import kmeans_quantized
 
     emb = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -136,23 +138,21 @@ def test_lloyd_routed_input_checkpoint_gate_parity(spark):
         .select("vec_id", "embedding")
     )
     par = spark.sparkContext.defaultParallelism
-    wide = emb.repartition(par)  # at/above the gate -> checkpoint engages
+    assert emb.rdd.getNumPartitions() < par
+    wide = emb.repartition(par)
+    checkpointed_input = re.compile(r"LogicalRDD \[vec_id#\d+L, v#\d+\]")
 
-    def run(df, flag):
-        old = sim._LLOYD_CKPT_ROUTED_INPUT
-        sim._LLOYD_CKPT_ROUTED_INPUT = flag
-        try:
-            return {
-                tuple(r)
-                for r in sim.kmeans_quantized(
-                    df, k=4, iters=2, route_min_k=4, nprobe=2, dim=64,
-                    return_assignments=True,
-                ).collect()
-            }
-        finally:
-            sim._LLOYD_CKPT_ROUTED_INPUT = old
+    def run(df):
+        out = kmeans_quantized(
+            df, k=4, iters=2, route_min_k=4, nprobe=2, dim=64, return_assignments=True
+        )
+        plan = out._jdf.queryExecution().logical().toString()
+        return bool(checkpointed_input.search(plan)), {tuple(r) for r in out.collect()}
 
-    assert run(wide, True) == run(wide, False) == run(emb, True)
+    wide_ckpt, wide_rows = run(wide)
+    narrow_ckpt, narrow_rows = run(emb)
+    assert wide_ckpt and not narrow_ckpt
+    assert wide_rows == narrow_rows and len(wide_rows) == 200
 
 
 def test_pq_adc_serving_path_matches_persisted_lut_path(spark):
