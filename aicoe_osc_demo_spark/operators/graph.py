@@ -198,10 +198,11 @@ def label_propagation(
     # the symmetrized edge set is scanned every iteration and its lineage
     # contains the caller's edge-generation chain twice (the union arms) —
     # checkpoint once so iterations join a materialized table.  All
-    # checkpoints here are LAZY: eager ones each launch a separate driver
-    # job (und + seed + one per iteration ≈ 6 job submissions of pure
-    # overhead at bench scale); lazy ones materialize inside the single
-    # job the caller's action runs, with identical lineage truncation.
+    # checkpoints here are LAZY (cache.shared), with the same lineage
+    # truncation as eager ones.  An eager cut runs its whole input as one
+    # extra job now; a lazy one runs only its last stage inside the
+    # caller's action.  Under AQE (on by default) the shuffle stages below
+    # each lazy cut still run as separate jobs while the plan is built.
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     ).distinct().transform(shared)
@@ -272,10 +273,11 @@ def k_core(
             )
         )
         .distinct()
-        # lazy: the count() below materializes the checkpoint in the SAME
-        # job — one driver job per round instead of two (the
-        # label_propagation eager->lazy pattern; measured a wash locally,
-        # the removed job submission is a constant driver-latency term)
+        # lazy: the count() below materializes the checkpoint's last
+        # stage, so no separate checkpoint job runs (the label_propagation
+        # eager->lazy pattern; measured a wash locally).  Under AQE the
+        # distinct's shuffle stage still runs as its own job while the
+        # plan is built.
         .transform(shared)
     )
     n_cur = und.count()
@@ -293,7 +295,9 @@ def k_core(
         nxt = (
             und.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-            # lazy + count: one job per round (see the und checkpoint note)
+            # lazy + count: no separate checkpoint job, but under AQE the
+            # shuffle stages below the cut still run as jobs of their own
+            # while the plan is built (see the und checkpoint note)
             .transform(shared)
         )
         n_next = nxt.count()

@@ -21,12 +21,13 @@ from __future__ import annotations
 
 import random
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.check_correctness import compare  # noqa: E402
 

@@ -16,10 +16,11 @@ bit-identical semantics.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def test_percentile_bins_null_group_yields_null_bins(spark):

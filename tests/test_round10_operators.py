@@ -4,11 +4,12 @@ CI and Krippendorff's alpha."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -5,10 +5,11 @@ between the two group_regression code paths (r12 advice items)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
@@ -75,7 +76,7 @@ def main() -> int:
     sf_dir = args.pop(0) if args and not args[0].startswith("--") else "/root/testdata/sf0.01"
     name_filter = args
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from aicoe_osc_demo_spark.session import get_spark
 

@@ -16,6 +16,7 @@ import os
 import sys
 import tempfile
 import traceback
+from pathlib import Path
 
 TABLES = (
     "region nation customer supplier part orders lineitem events"
@@ -64,7 +65,7 @@ def build_empty_dir(spark, src: str, n_rows: int = 0, nulls: bool = False) -> st
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from aicoe_osc_demo_spark.session import get_spark
 

@@ -8,8 +8,9 @@ from __future__ import annotations
 
 import inspect
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def first_comment_line(fn) -> str:

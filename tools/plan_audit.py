@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
 PATTERNS = {
     "exchanges": r"Exchange (?:hash|range)partitioning",
@@ -30,7 +31,7 @@ PATTERNS = {
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from aicoe_osc_demo_spark.session import get_spark
 
